@@ -69,7 +69,8 @@ d AS (
   FROM g, n GROUP BY doc_id)
 SELECT doc_id, n_tokens,
   CAST(sum_dec AS DOUBLE) AS sum_neglogp,
-  round(CAST(sum_dec AS DOUBLE) / n_tokens, 6) AS avg_neglogp
+  CAST((2 * CAST(sum_dec * 1000000 AS BIGINT) + n_tokens) // (2 * n_tokens)
+    AS DOUBLE) / 1e6 AS avg_neglogp
 FROM d
 
 -- ::klDrift

@@ -1,17 +1,23 @@
 package graft.core
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DataType, LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated star schema (TESTDATA.md).
   *
   * All reads are plain parquet scans so Catalyst can push filters and prune
   * columns into the scan (verify with `.explain`: `PushedFilters`,
-  * `ReadSchema`). Nothing is cached here — query plans decide.
+  * `ReadSchema`). No data is cached here — query plans decide. What IS
+  * remembered is each table's footer schema, once per session: every
+  * accessor goes through [[Tables.readMaybeLegacyNanos]], which infers a
+  * path's schema on its first touch and reads with `.schema(...)` after
+  * that (see there for the key, invalidation and the conf re-application).
   */
 final class Tables(spark: SparkSession, dir: String) {
-  private def t(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+  private def t(name: String): DataFrame =
+    Tables.readMaybeLegacyNanos(spark, s"$dir/$name.parquet")
 
   // Accessors are PLAIN scans — no blanket repartition. The driver's
   // testdata is single-row-group parquet, so scans plan as ONE split and
@@ -44,13 +50,12 @@ final class Tables(spark: SparkSession, dir: String) {
 
   /** Raw events with `ts` exactly as stored — int64 epoch-nanos for the
     * legacy layout (read via `spark.sql.legacy.parquet.nanosAsLong`),
-    * native timestamp otherwise. The conf is set ONLY when the plain read
-    * rejects the footer (Spark refuses TIMESTAMP(NANOS) without it, at
-    * schema-inference time, so the probe is eager and cheap) — the NTZ and
-    * TIMESTAMP layouts never see a session-conf side effect
-    * (TestdataSchemaSpec pins this). Callers that need a scan-pushable
-    * watermark predicate should use [[eventsSince]], which phrases the
-    * filter in the file's own physical domain.
+    * native timestamp otherwise. The conf is set ONLY when the file needs
+    * it (see [[Tables.readMaybeLegacyNanos]]) — the NTZ and TIMESTAMP
+    * layouts never see a session-conf side effect (TestdataSchemaSpec pins
+    * this). Callers that need a scan-pushable watermark predicate should
+    * use [[eventsSince]], which phrases the filter in the file's own
+    * physical domain.
     */
   def eventsRaw: DataFrame =
     Tables.readMaybeLegacyNanos(spark, s"$dir/events.parquet")
@@ -85,15 +90,54 @@ object Tables {
 
   def apply(spark: SparkSession, dir: String): Tables = new Tables(spark, dir)
 
-  /** Parquet read that enables `spark.sql.legacy.parquet.nanosAsLong` ONLY
-    * when the plain read rejects the footer — Spark refuses an int64
-    * TIMESTAMP(NANOS) column at schema-inference time without the flag, so
-    * the probe is eager and cheap, and non-legacy layouts never see a
-    * session-conf side effect (pinned by TestdataSchemaSpec). Any other
-    * failure (missing path, corrupt footer) rethrows from the retry.
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** A path's footer schema as inferred, column order untouched, and
+    * whether inferring it needed the legacy `nanosAsLong` conf.
     */
-  def readMaybeLegacyNanos(spark: SparkSession, path: String): DataFrame =
-    try spark.read.parquet(path)
+  private final case class FooterSchema(schema: StructType, nanosAsLong: Boolean)
+
+  /** The engine's one read path for input tables: a parquet read whose
+    * schema is inferred once per session, then supplied.
+    *
+    * Why: a plain `spark.read.parquet` runs a one-task schema-inference
+    * job on every call — measured 70–80 ms per read at local[4] (4-core
+    * host) on sf0.01 tables vs ~10 ms with the schema supplied — and a
+    * query session reads the same ten tables hundreds of times.
+    *
+    * The memo lives in [[Memo]] (weak per session, thread-safe: concurrent
+    * first touches of one path share one inference; `release()` keeps it,
+    * it holds no Dataset). Its key is the qualified path, the session's
+    * current `nanosAsLong` setting, and a digest of the leaf files (name,
+    * length, mtime; `_`/`.`-prefixed names skipped, as Spark's listing
+    * skips them) — one listing, no job. A rewritten file, or a directory
+    * that gains or loses part files, gets a new key and is re-inferred.
+    * The value is the footer schema exactly as Spark inferred it, so a hit
+    * plans the same scan as a plain read.
+    *
+    * Legacy nanos: Spark refuses an int64 TIMESTAMP(NANOS) column at
+    * schema-inference time unless `nanosAsLong` is set, so the first touch
+    * probes with the conf as it is and sets it ONLY when the plain read
+    * rejects the footer; non-legacy layouts never see a session-conf side
+    * effect (pinned by TestdataSchemaSpec). A hit on such an entry sets
+    * the conf again — the supplied LongType column needs it at scan time —
+    * so the conf ends up set iff the file needs it, whichever touch came
+    * first. The conf setting is part of the key because with the conf
+    * already on, a plain read cannot tell whether the file needs it. Any other failure (missing path, corrupt footer) rethrows from
+    * the inference unchanged: nothing is memoized, the conf is not flipped.
+    */
+  def readMaybeLegacyNanos(spark: SparkSession, path: String): DataFrame = {
+    val legacyOn = spark.conf.getOption(NanosAsLong).contains("true")
+    val footer = Memo.cached(spark,
+        s"parquet-schema:${leafDigest(spark, path)}:nanosAsLong=$legacyOn") {
+      inferFooter(spark, path)
+    }
+    if (footer.nanosAsLong) spark.conf.set(NanosAsLong, "true")
+    spark.read.schema(footer.schema).parquet(path)
+  }
+
+  private def inferFooter(spark: SparkSession, path: String): FooterSchema =
+    try FooterSchema(spark.read.parquet(path).schema, nanosAsLong = false)
     catch {
       // Only the schema-inference rejection of an int64 TIMESTAMP(NANOS)
       // column flips the session conf; a transient IO failure (missing
@@ -102,9 +146,30 @@ object Tables {
       // the rejection as "Illegal Parquet type: INT64 (TIMESTAMP(NANOS,…"
       // somewhere in the cause chain.
       case e: Exception if isNanosRejection(e) =>
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.read.parquet(path)
+        spark.conf.set(NanosAsLong, "true")
+        FooterSchema(spark.read.parquet(path).schema, nanosAsLong = true)
     }
+
+  /** Qualified path plus a SHA-256 of its leaf files' (path, length,
+    * mtime), listed recursively in name order. A missing path digests as
+    * such, so its (failing) inference is keyed apart from any later file.
+    */
+  private def leafDigest(spark: SparkSession, path: String): String = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = fs.makeQualified(p)
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    def visit(st: FileStatus): Unit =
+      if (st.isDirectory)
+        fs.listStatus(st.getPath)
+          .filterNot { c => val n = c.getPath.getName; n.startsWith("_") || n.startsWith(".") }
+          .sortBy(_.getPath.getName)
+          .foreach(visit)
+      else md.update(s"${st.getPath}\t${st.getLen}\t${st.getModificationTime}\n"
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    if (fs.exists(root)) visit(fs.getFileStatus(root)) else md.update("missing".getBytes)
+    s"$root:${java.util.HexFormat.of().formatHex(md.digest())}"
+  }
 
   private def isNanosRejection(e: Throwable): Boolean =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(10).exists { t =>

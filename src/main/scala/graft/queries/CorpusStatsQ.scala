@@ -149,7 +149,10 @@ object CorpusStatsQ {
     * Determinism: each term's −ln p is rounded to 6 BEFORE the per-doc
     * sum, and the sum runs in DECIMAL (order-independent, the Exact.dsum
     * rule) — summing raw doubles would drift with partitioning. The final
-    * mean is one double divide, rounded on both sides.
+    * mean is half-up integer micro-units, `(2·S + n) div (2·n)` over
+    * S = sum·1e6 (exact: the sum has scale 6), then /1e6 — the q92
+    * PageRank rule. `round(double, 6)` broke a .5 tie differently in Spark
+    * and DuckDB (3.406394 vs 3.406395 on one seeded corpus).
     */
   def unigramLogprob(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
@@ -169,9 +172,10 @@ object CorpusStatsQ {
       .agg(
         sum(col("tf")).as("n_tokens"),
         sum(col("tf") * col("r")).as("sum_dec"))
+      .withColumn("sum_u", (col("sum_dec") * 1000000).cast("long"))
       .select(col("doc_id"), col("n_tokens"),
         col("sum_dec").cast("double").as("sum_neglogp"),
-        round(col("sum_dec").cast("double") / col("n_tokens"), 6)
+        (expr("(2 * sum_u + n_tokens) div (2 * n_tokens)") / 1e6)
           .as("avg_neglogp"))
   }
 

@@ -30,7 +30,7 @@ object LayoutQ {
         p, Seq("ship_us"), files = 8)
       p
     }
-    spark.read.parquet(tmp)
+    Tables.readMaybeLegacyNanos(spark, tmp)
       .filter(col("ship_us") >= 865123200000000L && col("ship_us") < 873072000000000L)
       .select(col("l_orderkey"), col("l_linenumber"),
         col("l_extendedprice"), col("ship_us"))

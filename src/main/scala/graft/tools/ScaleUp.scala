@@ -147,19 +147,20 @@ object ScaleUp {
           "would collide; raise the stride for this source SF")
     }
 
-    val lineitem = spark.read.parquet(s"$src/lineitem.parquet")
+    val in = graft.core.Tables(spark, src)
+    val lineitem = in.lineitem
     assertBelowStride(lineitem, "l_orderkey", 1000000000L, "lineitem")
     write(copies(lineitem) { (d, k) =>
       d.withColumn("l_orderkey", col("l_orderkey") + lit(k.toLong * 1000000000L))
     }, "lineitem")
 
-    val orders = spark.read.parquet(s"$src/orders.parquet")
+    val orders = in.orders
     assertBelowStride(orders, "o_orderkey", 1000000000L, "orders")
     write(copies(orders) { (d, k) =>
       d.withColumn("o_orderkey", col("o_orderkey") + lit(k.toLong * 1000000000L))
     }, "orders")
 
-    val docs = spark.read.parquet(s"$src/documents.parquet")
+    val docs = in.documents
     assertBelowStride(docs, "doc_id", 10000000L, "documents")
     write(copies(docs) { (d, k) =>
       d.withColumn("doc_id", col("doc_id") + lit(k.toLong * 10000000L))
@@ -174,15 +175,12 @@ object ScaleUp {
     // by making one actor's history k× longer). Session/funnel/survival
     // counts scale exactly linearly; window-state parallelism grows with
     // the copies, which is precisely what the scale check must exercise.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val eventsSrc = spark.read.parquet(s"$src/events.parquet")
     // normalize ts to the current generator layout (TIMESTAMP_NTZ micros)
     // before writing: a legacy int64-nanos source would otherwise scale into
     // a bare-BIGINT ts that DuckDB reads as a number, breaking every events
     // oracle on the scaled dir (Spark itself would cope via
     // Tables.canonicalizeEventsTs, which is exactly why it would go unseen)
-    val events = graft.core.Tables.canonicalizeEventsTs(eventsSrc)
-      .withColumn("ts", col("ts").cast("timestamp_ntz"))
+    val events = in.events.withColumn("ts", col("ts").cast("timestamp_ntz"))
     assertBelowStride(events, "event_id", 1000000000L, "events")
     assertBelowStride(events, "user_id", 10000000L, "events")
     write(copies(events) { (d, k) =>
@@ -194,7 +192,7 @@ object ScaleUp {
     // (see the scaladoc) — the ANN family's scale-evidence input. The
     // pattern is zip_with-multiplied element-wise; ±1 products are exact,
     // so within-copy geometry is bit-identical to the source.
-    val emb = spark.read.parquet(s"$src/embeddings.parquet")
+    val emb = in.embeddings
     assertBelowStride(emb, "vec_id", 1000000L, "embeddings")
     val dim = assertUniformEmbeddingDim(emb)
     write(copies(emb) { (d, k) =>
@@ -217,7 +215,7 @@ object ScaleUp {
 
     for (t <- Seq("lineitem", "orders", "documents", "events", "embeddings"))
       println(s"[scaleup] $t rows: " +
-        spark.read.parquet(s"$dst/$t.parquet").count())
+        graft.core.Tables.readMaybeLegacyNanos(spark, s"$dst/$t.parquet").count())
     spark.stop()
   }
 }

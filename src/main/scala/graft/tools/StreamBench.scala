@@ -33,10 +33,7 @@ object StreamBench {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
-    // before the first events read: the legacy int64-nanos layout needs this
-    // conf at schema time (a no-op for the current micros layout)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val nInput = spark.read.parquet(s"$sfDir/events.parquet").count()
+    val nInput = graft.core.Tables(spark, sfDir).eventsRaw.count()
 
     def events() = EventStreams.readEventStream(spark, sfDir)
     def typed() = events()
