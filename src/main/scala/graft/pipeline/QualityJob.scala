@@ -87,11 +87,10 @@ object QualityJob {
     *                   price_min, price_max, qty_min, qty_max)
     * @param dateDim    date_key (dd-MM-yyyy string) + calendar columns
     * @param materialize hook applied to the full canonical frame BEFORE the
-    *                    severity split — the seam a caller uses to publish
-    *                    the canonical rows as a shared artifact (PipelineQ
-    *                    routes it through [[graft.core.DiskCache]], VERDICT
-    *                    r11 item 3) so finalDf/quarantine/metricsInput all
-    *                    read one store instead of re-running the join chain.
+    *                    severity split — the seam a caller uses to share the
+    *                    canonical rows (PipelineQ persists them) so
+    *                    finalDf/quarantine/metricsInput all read one built
+    *                    frame instead of re-running the join chain.
     *                    Identity by default; must be semantics-preserving.
     */
   def apply(items: DataFrame, options: DataFrame, dateDim: DataFrame,

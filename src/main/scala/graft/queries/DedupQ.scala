@@ -39,16 +39,11 @@ object DedupQ {
     */
   private def bandPairCounts(spark: SparkSession, dir: String): DataFrame =
     graft.core.Memo.cached(spark, s"q170-bandpairs:$dir") {
-      // cross-JVM artifact (DiskCache, the GraphQ pattern): the tokenize →
-      // shingle → minhash → band expansion is the dedup family's root
-      // build; later JVMs read the published pair table
-      val fp = graft.core.DiskCache.fingerprint(dir, Seq("documents"))
-      graft.core.DiskCache.cached(spark, s"minhash-bandpairs-v1-$fp") {
-        val t = Tables(spark, dir)
-        val bands = Dedup.bandFingerprints(t.documents, "doc_id", "text",
-          NumHashes, RowsPerBand)
-        Dedup.candidatePairsWithCount(bands, "doc_id", MaxBucketSize)
-      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val t = Tables(spark, dir)
+      val bands = Dedup.bandFingerprints(t.documents, "doc_id", "text",
+        NumHashes, RowsPerBand)
+      Dedup.candidatePairsWithCount(bands, "doc_id", MaxBucketSize)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   def minhashPairs(spark: SparkSession, dir: String): DataFrame =
@@ -159,16 +154,17 @@ object DedupQ {
     * closure implementation, so label-propagation bugs can't self-confirm.
     */
   def neardupComponents(spark: SparkSession, dir: String): DataFrame =
-    // the label-propagation result is localCheckpoint-backed (materialized)
-    // — memoizing shares it between q76 and q100's curation for free
+    // memoized: q76/q100/q221/q136 all ride the one closure. The converged
+    // labels are localCheckpoint blocks, which cannot be recomputed once
+    // lost, so they are written once to a scratch parquet and readers get
+    // the file-backed frame (MemoEvictionChaosSpec). The read-back is
+    // spread: a gate-scale write is one small file, and a 1-split read
+    // would run every downstream stage single-task.
     graft.core.Memo.cached(spark, s"q76-components:$dir") {
-      // the closure's label-propagation rounds are the family's iterative
-      // block (q76/q100/q221/q136 all ride it) — published cross-JVM, a
-      // warm pass reads (id, component) instead of iterating
-      val fp = graft.core.DiskCache.fingerprint(dir, Seq("documents"))
-      graft.core.DiskCache.cached(spark, s"neardup-components-v1-$fp") {
-        Dedup.connectedComponents(minhashPairs(spark, dir), "doc_a", "doc_b")
-      }
+      val comps = Dedup.connectedComponents(minhashPairs(spark, dir), "doc_a", "doc_b")
+      val path = graft.core.Scratch.dir("graft-components") + "/components"
+      comps.write.parquet(path)
+      Tables.spread(spark.read.schema(comps.schema).parquet(path))
     }
 
   private val neardupComponentsSql = Oracles("dedup", "neardupComponents",

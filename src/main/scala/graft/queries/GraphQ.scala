@@ -92,17 +92,12 @@ object GraphQ {
     */
   private def copurchasePairCounts(spark: SparkSession, dir: String): DataFrame =
     graft.core.Memo.cached(spark, s"copurchase-paircnt:$dir") {
-      // cross-JVM artifact (DiskCache): the expansion is rebuilt only when
-      // the lineitem files change; the next bench pass / Verify JVM reads
-      // the published parquet instead of re-expanding every order
-      val fp = graft.core.DiskCache.fingerprint(dir, Seq("lineitem"))
-      graft.core.DiskCache.cached(spark, s"copurchase-paircnt-v1-$fp") {
-        val t = Tables(spark, dir)
-        val lp = t.lineitem.select(
-          lit(0).as("band"), col("l_orderkey").cast("string").as("band_key"),
-          col("l_partkey").as("p"))
-        graft.ops.Dedup.candidatePairsWithCount(lp, "p")
-      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val t = Tables(spark, dir)
+      val lp = t.lineitem.select(
+        lit(0).as("band"), col("l_orderkey").cast("string").as("band_key"),
+        col("l_partkey").as("p"))
+      graft.ops.Dedup.candidatePairsWithCount(lp, "p")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Distinct co-purchase edges (a<b): a narrow projection of the
@@ -127,24 +122,19 @@ object GraphQ {
     // tiny stats branch re-ran the FULL per-order pair expansion just to
     // re-derive degrees — one whole extra pass over the edge build
     graft.core.Memo.cached(spark, s"q126-graph:$dir") {
-      // the oriented-edge table is the second cross-JVM artifact: its
-      // build rides the pair expansion plus two degree joins, all skipped
-      // on a fingerprint hit (DiskCache; VERDICT r10 item 7)
-      val fp = graft.core.DiskCache.fingerprint(dir, Seq("lineitem"))
-      val ranked = graft.core.DiskCache.cached(spark, s"graph-oriented-v1-$fp") {
-        val e = copurchaseEdges(spark, dir)
-        val dg0 = e.select(explode(array(col("a"), col("b"))).as("v"))
-          .groupBy(col("v")).agg(count(lit(1)).as("d"))
-        // orient a↔b toward the higher (degree, id); rank carried as a struct
-        e.join(dg0.select(col("v").as("a"), col("d").as("da")), Seq("a"))
-          .join(dg0.select(col("v").as("b"), col("d").as("db")), Seq("b"))
-          .select(
-            when(struct(col("da"), col("a")) < struct(col("db"), col("b")),
-              struct(col("a").as("id"), col("b").as("oid")))
-              .otherwise(struct(col("b").as("id"), col("a").as("oid")))
-              .as("o"))
-          .select(col("o.id").as("src"), col("o.oid").as("dst"))
-      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val e = copurchaseEdges(spark, dir)
+      val dg0 = e.select(explode(array(col("a"), col("b"))).as("v"))
+        .groupBy(col("v")).agg(count(lit(1)).as("d"))
+      // orient a↔b toward the higher (degree, id); rank carried as a struct
+      val ranked = e.join(dg0.select(col("v").as("a"), col("d").as("da")), Seq("a"))
+        .join(dg0.select(col("v").as("b"), col("d").as("db")), Seq("b"))
+        .select(
+          when(struct(col("da"), col("a")) < struct(col("db"), col("b")),
+            struct(col("a").as("id"), col("b").as("oid")))
+            .otherwise(struct(col("b").as("id"), col("a").as("oid")))
+            .as("o"))
+        .select(col("o.id").as("src"), col("o.oid").as("dst"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // degrees re-derived from the oriented table (src∪dst explode): one
       // in-memory pass over the artifact, never a second pair expansion
       val dg = ranked.select(explode(array(col("src"), col("dst"))).as("v"))

@@ -215,25 +215,13 @@ object PipelineQ {
   /** One pipeline instantiation per (session, sfDir) via [[graft.core.Memo]]
     * (the repo's single memo mechanism): the transform output is persisted
     * and the quality output's internal cache (QualityJob P7) is shared by
-    * every downstream metric query.
-    *
-    * Cross-JVM artifact store (VERDICT r11 item 3): the two heavy layers —
-    * the regex-transform output (q63's cost) and the full canonical quality
-    * frame (q64/q65's cost: threshold agg + two joins + schema canon) — are
-    * published through [[graft.core.DiskCache]], keyed on the fingerprint of
-    * the ONLY raw inputs the whole chain derives from (`lineitem`+`orders`;
-    * the feed, options and date-dim tables are deterministic functions of
-    * them, and every rule table is code, covered by the build fingerprint).
-    * A later JVM (the graded bench pass, a Verify run) reads the artifacts
-    * instead of re-running the transform + join chain; regenerated sources
-    * or a rebuilt library invalidate both entries. Cold floors remain
-    * measurable via `SPARK_GRAFT_NO_DISKCACHE=1`, and the DuckDB oracles
-    * recompute every stage from the raw tables regardless of which path
-    * served the frame.
+    * every downstream metric query. The full canonical quality frame
+    * (threshold agg + two joins + schema canon) is persisted too, so q64
+    * and q65 read one built frame instead of each re-running the join
+    * chain.
     */
   private def pipeline(spark: SparkSession, dir: String): (DataFrame, QualityJob.QualityOutput) =
     graft.core.Memo.cached(spark, s"pipeline:$dir") {
-      val fp = graft.core.DiskCache.fingerprint(dir, Seq("lineitem", "orders"))
       // dictionarize = false: the per-row native-expression chain. The
       // dictionary strategy was A/B-measured here (tools/DictProbe, sf0.1,
       // interleaved, re-run under the round-10 pre-touched-heap config —
@@ -244,12 +232,10 @@ object PipelineQ {
       // no-cache-coupling row-wise chain stays; the dictionary path
       // remains the right call when the input is a CHEAP re-scannable
       // table (see TransformJob's scaladoc — PipelineRunner's CSVs).
-      val t = graft.core.DiskCache.cached(spark, s"pipeline-transform-v1-$fp") {
-        TransformJob(feed(spark, dir), rules, dictionarize = false)
-      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val t = TransformJob(feed(spark, dir), rules, dictionarize = false)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val q = QualityJob(t, options(spark, dir), dateDim(spark, dir), thresholdsOf(t),
-        materialize = c =>
-          graft.core.DiskCache.cached(spark, s"pipeline-canonical-v1-$fp")(c))
+        materialize = _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       (t, q)
     }
 

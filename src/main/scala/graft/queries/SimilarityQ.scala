@@ -83,16 +83,12 @@ object SimilarityQ {
     */
   private def lshPairs(spark: SparkSession, dir: String): DataFrame =
     graft.core.Memo.cached(spark, s"q77-pairs:$dir") {
-      // cross-JVM artifact (DiskCache): the signature build + one-bucket
-      // streaming score is rebuilt only when the embeddings files change
-      val fp = graft.core.DiskCache.fingerprint(dir, Seq("embeddings"))
-      graft.core.DiskCache.cached(spark, s"lsh-neardup-pairs-v1-$fp") {
-        val t = Tables(spark, dir)
-        val bits = adaptiveLshBits(t.embeddings.count())
-        Similarity.lshNearDupPairs(
-          t.embeddings.select(col("vec_id").as("id"), col("embedding").as("vec")),
-          numBits = bits, minCosine = 0.35, dim = 64, maxBucketSize = 4096)
-      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val t = Tables(spark, dir)
+      val bits = adaptiveLshBits(t.embeddings.count())
+      Similarity.lshNearDupPairs(
+        t.embeddings.select(col("vec_id").as("id"), col("embedding").as("vec")),
+        numBits = bits, minCosine = 0.35, dim = 64, maxBucketSize = 4096)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   def lshNearDup(spark: SparkSession, dir: String): DataFrame =

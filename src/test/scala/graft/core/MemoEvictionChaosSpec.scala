@@ -13,13 +13,6 @@ import graft.{SparkEntry, SparkTestBase}
   * through the retained lineage. This spec simulates total block loss
   * between each reader and asserts every reader still matches the
   * no-chaos truth row-for-row.
-  *
-  * The truth and chaos phases run under DIFFERENT isolated DiskCache
-  * roots: without that, the truth phase's published components artifact
-  * would serve the chaos phase's "recompute" from disk and the eviction
-  * would exercise nothing (disk artifacts DO survive executor loss in
-  * production, but that resilience is DiskCacheSpec's subject — here the
-  * lineage recompute must stand on its own).
   */
 class MemoEvictionChaosSpec extends SparkTestBase {
 
@@ -42,33 +35,26 @@ class MemoEvictionChaosSpec extends SparkTestBase {
   }
 
   test("dedup memo chain survives total cached-block loss between readers") {
-    val prevCache = sys.props.get("graft.cache.dir")
     try {
-      // truth: cold builds, fresh memos, isolated artifact root
-      sys.props("graft.cache.dir") = Scratch.dir("graft-chaos-truth")
+      // truth: cold builds, fresh memos
       Memo.release(spark)
       val want = chain.map(n => n -> canon(n)).toMap
 
-      // chaos: ANOTHER isolated root (the truth phase's artifacts cannot
-      // mask this phase's recompute), fresh memos; after each reader
-      // materializes, drop EVERY cached block before the next reader.
+      // chaos: fresh memos again; after each reader materializes, drop
+      // EVERY cached block before the next reader.
       //
-      // SCOPE (ADVICE r18, adjudicated r19): within this phase, the
-      // DiskCache-backed links (q76's components, the band-pairs layer)
-      // recover through their own same-phase parquet artifacts, so only
-      // the plain-persist links (q37's pairs) recompute through raw
-      // lineage. That split is the ENGINE'S ACTUAL durability design,
-      // not a spec gap: the iterative links localCheckpoint their rounds
-      // (lineage deliberately truncated — a localCheckpoint block is
-      // not recomputable, by Spark contract), and the DiskCache artifact
-      // IS their cross-reader durability story. An r19 variant that
-      // disabled the store (symlink root, the DiskCacheSpec semantics)
-      // failed precisely there — CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on
-      // the evicted component rounds — confirming pure-lineage recovery
-      // is NOT a property these links have or claim. What this test
+      // SCOPE: the links recover by different paths, and that split is
+      // the engine's actual durability design. The plain-persist links
+      // (q37's pairs, the band-pairs layer) recompute through raw lineage.
+      // q76's components cannot: label propagation localCheckpoints its
+      // rounds (lineage deliberately truncated; a localCheckpoint block is
+      // not recomputable, by Spark contract), so serving the converged
+      // labels straight from those blocks fails here with
+      // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. Their durability is the scratch
+      // parquet round trip in `DedupQ.neardupComponents`: late readers
+      // scan the file, which block loss does not touch. What this test
       // pins: the memo layer serves correct rows to late readers after
       // total block loss, through whichever recovery path each link owns.
-      sys.props("graft.cache.dir") = Scratch.dir("graft-chaos-run")
       Memo.release(spark)
       val got = chain.map { n =>
         val r = canon(n)
@@ -85,10 +71,6 @@ class MemoEvictionChaosSpec extends SparkTestBase {
           s"$n diverged from the no-chaos truth after block eviction")
       }
     } finally {
-      prevCache match {
-        case Some(v) => sys.props("graft.cache.dir") = v
-        case None => sys.props -= "graft.cache.dir"
-      }
       // later suites must not inherit evicted-but-retained memo entries
       Memo.release(spark)
     }
