@@ -15,6 +15,12 @@ import org.apache.spark.sql.SparkSession
   * `count()` would let Spark prune projection-only work and under-report.
   * A warm-up pass (flagship query) absorbs JVM/codegen/classload cost so the
   * per-query numbers measure the plans, not the JIT.
+  *
+  * Every query is measured once, in suite order, and reported as measured:
+  * the total is one JVM's first-run work. A failed query is reported as -1,
+  * left out of the total and counted in `"failed"`. Host weather
+  * (calibrations, watchdog samples, per-query windows) is recorded beside
+  * the numbers and never used to retry, drop or replace one.
   */
 object Bench {
   /** Route shuffle/spill (`spark.local.dir`) and JVM scratch
@@ -178,10 +184,10 @@ object Bench {
       }
       x
     }
-    // Every calibration/watchdog/taint/retry datum is ALSO collected here
-    // and archived to target/bench_host.json at pass end: the round-9 gate
-    // could not be adjudicated because this evidence lived only in stderr,
-    // which the driver's tail capture lost (VERDICT r9 "What's missing" #2).
+    // Every calibration/watchdog datum is ALSO collected here and archived
+    // to target/bench_host.json at pass end: the round-9 gate could not be
+    // adjudicated because this evidence lived only in stderr, which the
+    // driver's tail capture lost (VERDICT r9 "What's missing" #2).
     val calRecords = new scala.collection.mutable.ArrayBuffer[String]()
     // boundary-calibration effective parallelism by tag — feeds the compact
     // line's host summary (VERDICT r16 item 1)
@@ -222,9 +228,9 @@ object Bench {
     // fixed 50M-iteration spin, ~3% of one core's duty cycle — noise on a
     // 32-thread suite). The host exhibits multi-10-second stall phases
     // (PLANS_r9.md §3: single-task shuffle reads at 35–65 s with zero GC
-    // and a clean boundary calibration); per-query taint attribution
-    // below turns "this pass was slow somewhere" into "THESE queries were
-    // measured during a stall". Stderr only — not the JSON contract.
+    // and a clean boundary calibration); the samples, set against the
+    // per-query measure windows in bench_host.json, turn "this pass was
+    // slow somewhere" into "THESE queries were measured during a stall".
     // sample = (wallMs, spinMs, stealJiffiesDelta, iowaitJiffiesDelta):
     // spin slowdown with ~zero steal = self-load (the suite's own 32
     // threads); spin slowdown WITH steal = the hypervisor giving our
@@ -260,18 +266,15 @@ object Bench {
     // warm-up: JVM + parquet footer caches + codegen paths
     runOnce("q01_pricing_summary")
 
-    // SPARK_GRAFT_BENCH_RUNS > 1 reports the per-query median, damping the
-    // host's run-to-run jitter (BASELINE.md) at the cost of longer bench time
-    val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "1").toInt.max(1)
     def measure(name: String): Double = {
       // stage-log attribution marker (diagnostic only, same knob as the
       // listener): lets a stage-log parse group [stage] lines per query
       if (sys.env.contains("SPARK_GRAFT_STAGE_LOG"))
         System.err.println(s"[q] $name")
       val w0 = System.currentTimeMillis()
-      val ts = (1 to repeats).map(_ => runOnce(name)).sorted
+      val t = runOnce(name)
       windows += ((name, w0, System.currentTimeMillis()))
-      if (ts.head < 0) -1.0 else ts(ts.length / 2)
+      t
     }
 
     // SPARK_GRAFT_BENCH_ONLY=q63_...,q64_... restricts the run (scale
@@ -284,208 +287,27 @@ object Bench {
     // footprint at one family's caches — a 152-query run otherwise
     // accumulates every family's persisted frames and pays for them in
     // GC on every later query (round-5 stage logs: 37–46 s gcSum).
-    // SPARK_GRAFT_NO_RELEASE=1 disables the boundary release — the A/B
-    // toggle the round-6 adjudication used to attribute suite-tail GC
-    // inflation to memo accumulation (BASELINE.md); not a tuning knob
-    val noRelease = sys.env.contains("SPARK_GRAFT_NO_RELEASE")
-    var results = SparkEntry.defGroups.flatMap { case (_, defs) =>
+    val results = SparkEntry.defGroups.flatMap { case (_, defs) =>
       val rs = defs.map(_.name)
         .filter(n => only.forall(_.contains(n)))
         .map(n => n -> measure(n))
-      if (!noRelease) graft.core.Memo.release(spark)
+      graft.core.Memo.release(spark)
       rs
     }
-    // Taint detection: a query is stall-tainted if any watchdog sample
-    // that landed in (or within 5 s before) its measure window ran ≥2×
-    // the pass-median spin time — the host's documented steal/IO phases
-    // (PLANS_r9.md §3), not the query's plan.
-    case class Taint(name: String, ratio: Double, steal: Long, iow: Long) {
-      def label: String = f"$name:$ratio%.1fx/st$steal/io$iow"
-    }
-    def taintedNow(): Seq[Taint] = {
-      val samples = calSamples.toArray(Array.empty[(Long, Double, Long, Long)])
-      if (samples.length < 5) return Nil
-      val med = samples.map(_._2).sorted.apply(samples.length / 2)
-      windows.toSeq.flatMap { case (name, a, b) =>
-        val in = samples.filter(s => s._1 >= a - 5000 && s._1 <= b)
-        val worst = in.map(_._2).maxOption.getOrElse(0.0)
-        val steal = in.map(_._3).maxOption.getOrElse(0L)
-        val iow = in.map(_._4).maxOption.getOrElse(0L)
-        if (worst >= 2 * med)
-          Some(Taint(name, worst / med, steal, iow))
-        else None
-      }
-    }
-    // Stall-retry: re-measure queries whose window overlapped a detected
-    // stall and keep the per-query MIN — the same query on the same plan,
-    // just not measured while the hypervisor was giving our CPUs away or
-    // the disk was stalled. Bounded (one retry each, ≤20 queries, ≤180 s
-    // wall) so a globally-slow host can't loop the pass. Skipped for
-    // BENCH_ONLY spot runs (interactive; taint is reported, the caller
-    // re-runs). Every retry archives (original, retry, kept, reason) to
-    // bench_host.json so the substitution is auditable, never silent.
-    //
-    // Floor outliers (VERDICT r11 item 1): the taint heuristic and the
-    // top-8 net both missed round-11's q47 (4.18 s graded vs its 0.71 s
-    // recorded floor — untainted, under the 5 s top-heavy bar). The pass
-    // now also retries any UNTAINTED query measuring >3× its recorded
-    // per-query floor (tools/floors.json, per-query min over recorded
-    // full passes), under the same <0.6× stall-signature acceptance, so
-    // an inflated mid-cost measurement is adjudicated instead of shipped.
-    val retryLog = new scala.collection.mutable.ArrayBuffer[String]()
-    // (query, first-run seconds) for every retry SUBSTITUTION — carried in
-    // the full line's host block as "retry_orig" so floor folds can use
-    // first-run values only (a retry runs in a JIT-warm JVM; folding its
-    // time gives a floor no cold first run can reach, and every later pass
-    // then "outliers" on it — the r19 q247/q73 feedback loop).
-    val retryOrig = new scala.collection.mutable.ArrayBuffer[(String, Double)]()
-    val floors: Map[String, Double] = {
-      val path = sys.env.getOrElse("SPARK_GRAFT_FLOORS", "tools/floors.json")
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(path)), "UTF-8")
-        // "__"-prefixed keys are floors.json metadata (provenance block,
-        // r19 — VERDICT r18 item 2), not query floors; non-numeric
-        // matches (e.g. a date inside the meta block) are skipped rather
-        // than failing the whole table load
-        val pair = """"([A-Za-z0-9_]+)"\s*:\s*([0-9.Ee+-]+)""".r
-        pair.findAllMatchIn(txt).flatMap { m =>
-          if (m.group(1).startsWith("__")) None
-          else m.group(2).toDoubleOption.map(m.group(1) -> _)
-        }.toMap
-      } catch {
-        case e: Exception =>
-          System.err.println(s"[cal] no floor table ($path): ${e.getMessage}")
-          Map.empty[String, Double]
-      }
-    }
-    if (only.isEmpty) {
-      // Retry bar is deliberately higher than the report bar: the measured
-      // time must be non-trivial (≥2 s — a sub-second query can't recover
-      // meaningful total time) and the window must show either a ≥3× spin
-      // slowdown or direct external evidence (stolen jiffies / iowait) —
-      // a bare 2× spin sample is routine scheduling noise under the
-      // suite's own 32-thread load.
-      val stallFlagged = taintedNow()
-        .filter(t => t.ratio >= 3.0 || t.steal >= 50 || t.iow >= 10)
-        .map(_.name)
-        .filter(n => results.exists { case (k, v) => k == n && v >= 2.0 })
-        .toSet
-      // Untainted queries >2× their recorded floor whose EXCESS is
-      // material (≥1 s over floor — the q47 class, and round-13's
-      // sub-2 s q06/q175 class, which the old `v >= 2.0` bar named in
-      // the audit but never retried: the audit below uses the SAME
-      // eligibility so it can no longer list entries the net refuses
-      // to touch). Ordered worst-ratio-first so the cap spends its
-      // budget on the most inflated measurements. Bar widened 3× → 2×
-      // in r19 (VERDICT r18 item 3): q119's 2.40×-floor graded outlier
-      // slipped the 3× net; the A/B cost of the wider bar on a calm
-      // r19 pass is archived in OPTIMIZATION_r19.md (a handful of extra
-      // retries, bounded by the same ≤20-query / 180 s caps).
-      val floorOutliers = results
-        .filter { case (k, v) =>
-          !stallFlagged.contains(k) &&
-            floors.get(k).exists(f => f > 0 && v > 2.0 * f && v - f >= 1.0)
-        }
-        .sortBy { case (k, v) => -(v / floors(k)) }
-        .map(_._1)
-      // The taint heuristic has misses (host stalls that slow memory/IO
-      // without slowing the watchdog's cache-resident spin — a pass
-      // recorded q148 at 22.5 s untainted vs a 3.6 s warm median), so the
-      // most expensive measurements also re-run. Asymmetry guard (ADVICE
-      // r9): best-of-2 applied only at the top of the pass would harvest
-      // ordinary run-to-run noise downward where it costs the most, so an
-      // UNTAINTED top-heavy retry replaces its original only when the
-      // improvement is a stall signature (retry < 0.6× original), not
-      // garden-variety jitter; taint-flagged retries keep the plain min.
-      val topHeavy = results.filter(_._2 >= 5.0).sortBy(-_._2)
-        .take(8).map(_._1)
-      val reason = scala.collection.mutable.Map.empty[String, String]
-      for (n <- topHeavy) reason(n) = "top_heavy"
-      for (n <- floorOutliers) reason(n) = "floor_outlier"
-      for (n <- stallFlagged) reason(n) = "stall_taint"
-      val toRetry =
-        (stallFlagged.toSeq ++ floorOutliers ++ topHeavy).distinct.take(20)
-      if (toRetry.nonEmpty) {
-        System.err.println(s"[cal] stall-retry of ${toRetry.size} " +
-          s"(taint/floor/top-heavy): " +
-          toRetry.map(n => s"$n[${reason(n)}]").mkString(","))
-        val deadline = System.nanoTime() + 180L * 1000 * 1000 * 1000
-        val better = toRetry.iterator
-          .takeWhile(_ => System.nanoTime() < deadline)
-          .map { n =>
-            // release between retried measurements, not just once after the
-            // loop: two retried queries sharing a memo family would
-            // otherwise let the second measure against a cache the first
-            // retry warmed, silently vanishing the family's build cost
-            // from the suite total (ADVICE r9, high). dropKeptArtifacts:
-            // the non-Dataset entries (scratch paths, the Derby mirror,
-            // q195's collected merge list) survive a plain release, and a
-            // retry riding one measures ~nothing — r19's q73/q74/q94/q195
-            // retries recorded 0.04–0.15 s against 1.1–2.6 s of declared
-            // work, numbers no fresh-JVM first run can produce (and the
-            // floor min-fold then locked them in as permanent outlier
-            // bait). A retry must re-do the query's full declared work.
-            graft.core.Memo.release(spark, dropKeptArtifacts = true)
-            n -> measure(n)
-          }.toMap
-        graft.core.Memo.release(spark, dropKeptArtifacts = true)
-        results = results.map { case (k, v) =>
-          better.get(k) match {
-            case Some(r) if r >= 0 && (r < v || v < 0) =>
-              val tainted = stallFlagged.contains(k)
-              val keep = tainted || v < 0 || r < 0.6 * v
-              val kept = if (keep) r else v
-              retryLog += BenchJson.retryRecord(k, v, r, kept, tainted,
-                reason.getOrElse(k, "top_heavy"))
-              if (kept != v) retryOrig += (k -> v)
-              k -> kept
-            case Some(r) =>
-              retryLog += BenchJson.retryRecord(k, v, r, v, stallFlagged.contains(k),
-                reason.getOrElse(k, "top_heavy"))
-              k -> v
-            case None => k -> v
-          }
-        }
-      }
-    }
     calibrate("end")
-    // Taint report (post-retry windows included) — read the floor tables
-    // against this line.
-    locally {
-      val samples = calSamples.toArray(Array.empty[(Long, Double, Long, Long)])
-      if (samples.length >= 5) {
-        val med = samples.map(_._2).sorted.apply(samples.length / 2)
-        val tainted = taintedNow().map(_.label)
-        System.err.println(
-          f"[cal] watchdog n=${samples.length} med=$med%.0f ms " +
-            f"max=${samples.map(_._2).max}%.0f ms " +
-            f"steal=${samples.map(_._3).sum} iowait=${samples.map(_._4).sum} " +
-            f"tainted=${tainted.size}: " + tainted.mkString(","))
-      }
-    }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    // A failed query is recorded as -1 and left out of the total, so the
+    // count rides both graded lines: a pass with failures is not a faster
+    // pass.
     val total = results.map(_._2).filter(_ >= 0).sum
-    // First-run total (VERDICT r19 item 5): the same sum with every retry
-    // substitution undone (retryOrig holds the pre-substitution first-run
-    // seconds; `results` holds the kept values). Both totals go out on
-    // both graded lines, so a reader can compare passes on first-run
-    // numbers without digging in bench_host.json.
-    val firstRunTotal = {
-      val kept = results.toMap
-      total + retryOrig.map { case (k, o) => o - kept.getOrElse(k, o) }.sum
-    }
+    val failed = results.count(_._2 < 0)
     // Host-weather summary embedded in the graded lines themselves
     // (VERDICT r16 item 1): a round-over-round total drift must be
     // adjudicable from BENCH_rN.json alone — bench_host.json holds the
     // full sample stream but is wiped with target/ between sessions.
-    // Two variants: the FULL line (stdout + target/bench.json) carries
-    // "retry_orig" (pre-substitution first-run seconds — what floor folds
-    // must use), while the tail-sized compact line keeps the lean summary
-    // so it stays within the driver's ~2 KB capture.
-    def hostJsonWith(orig: Seq[(String, Double)]): String = {
-      val samples = calSamples.toArray(Array.empty[(Long, Double, Long, Long)])
+    val samples = calSamples.toArray(Array.empty[(Long, Double, Long, Long)])
+    val hostJson = {
       val spins = samples.map(_._2).sorted
       BenchJson.hostSummary(
         steal = samples.map(_._3).filter(_ >= 0).sum,
@@ -494,13 +316,8 @@ object Bench {
         maxSpin = if (spins.nonEmpty) spins.last else -1.0,
         nSamples = samples.length,
         effStart = calEff.getOrElse("start", -1.0),
-        effEnd = calEff.getOrElse("end", -1.0),
-        retries = retryLog.size,
-        tainted = taintedNow().size,
-        runsPerQuery = repeats,
-        retryOrig = orig)
+        effEnd = calEff.getOrElse("end", -1.0))
     }
-    val hostJson = hostJsonWith(retryOrig.toSeq)
     // Streaming-drain throughput (VERDICT r16 stretch 8): q231/q232's
     // graded seconds are mostly AvailableNow harness fixed cost — the
     // artifact records the drains' rows/s so throughput is visible
@@ -519,7 +336,7 @@ object Bench {
     // DIFFERENT queries payloads for one pass. Spot runs print no compact
     // line, so they keep the plain "total" metric.
     val fullMetric = if (only.isEmpty) "total_full" else "total"
-    val line = s"""{"metric":"$fullMetric","value":$total,"value_first_run":$firstRunTotal,"unit":"sec","queries":$qs,"host":$hostJson,$streamExtra"sf":"$sfDir"}"""
+    val line = s"""{"metric":"$fullMetric","value":$total,"failed":$failed,"unit":"sec","queries":$qs,"host":$hostJson,$streamExtra"sf":"$sfDir"}"""
     println(line)
     // Persist the full result AND the host forensics to files: the driver's
     // stdout tail keeps only the last ~2 KB, which truncated every round's
@@ -537,33 +354,16 @@ object Bench {
     }
     // bench_host.json — the self-adjudication evidence the round-9 gate
     // lacked: calibration boundaries, every watchdog sample (spin ms +
-    // /proc/stat steal/iowait deltas), per-query measure windows, the
-    // taint attribution, and the full retry log with pre-substitution
-    // originals. With this file a reader can re-derive which graded
-    // numbers were measured inside a host stall phase without needing the
-    // (lost) stderr stream.
+    // /proc/stat steal/iowait deltas) and per-query measure windows. With
+    // this file a reader can re-derive which graded numbers were measured
+    // inside a host stall phase without needing the (lost) stderr stream.
     if (only.isEmpty) try {
-      val samples = calSamples.toArray(Array.empty[(Long, Double, Long, Long)])
       val med = if (samples.length >= 5)
         samples.map(_._2).sorted.apply(samples.length / 2) else -1.0
-      val taintJson = taintedNow().map(t =>
-        BenchJson.taintRecord(t.name, t.ratio, t.steal, t.iow))
       val windowJson = windows.map { case (n, a, b) =>
         s"""["$n",$a,$b]""" }
       val sampleJson = samples.map { case (ts, ms, st, io) =>
         BenchJson.sample(ts, ms, st, io) }
-      // Post-retry floor audit (VERDICT r11 item 1's "done" bar): any
-      // query still >3× its recorded floor — with a MATERIAL excess,
-      // the same ≥1 s-over-floor eligibility the retry net uses — is
-      // named here, so a reader can check each one carries taint/retry
-      // evidence above instead of diffing the full map against
-      // tools/floors.json.
-      val floorOutliersPost = results
-        .filter { case (k, v) =>
-          v >= 0 &&
-            floors.get(k).exists(f => f > 0 && v > 3.0 * f && v - f >= 1.0) }
-        .map { case (k, v) =>
-          s"""{"q":"$k","sec":$v,"floor":${floors(k)}}""" }
       val host =
         s"""{"ts_ms":${System.currentTimeMillis()},"sf":"$sfDir","cpus":$cpus,
            |"heap_max_mb":${Runtime.getRuntime.maxMemory() >> 20},
@@ -574,10 +374,7 @@ object Bench {
            |"steal_total":${samples.map(_._3).filter(_ >= 0).sum},
            |"iowait_total":${samples.map(_._4).filter(_ >= 0).sum},
            |"samples_ts_spinms_steal_iowait":[${sampleJson.mkString(",")}]},
-           |"windows_name_start_end_ms":[${windowJson.mkString(",")}],
-           |"tainted":[${taintJson.mkString(",")}],
-           |"floor_outliers_post_retry":[${floorOutliersPost.mkString(",")}],
-           |"retries":[${retryLog.mkString(",")}]}""".stripMargin
+           |"windows_name_start_end_ms":[${windowJson.mkString(",")}]}""".stripMargin
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get("target/bench_host.json").toAbsolutePath, host + "\n")
       System.err.println("[cal] host forensics archived to target/bench_host.json")
@@ -593,8 +390,8 @@ object Bench {
     // JSON object no matter what.
     if (only.isEmpty) {
       val top = results.filter(_._2 >= 0).sortBy(-_._2).take(20)
-      println(BenchJson.compactTotal(total, firstRunTotal, top, sfDir,
-        results.size, hostJsonWith(Nil), streamExtra))
+      println(BenchJson.compactTotal(total, failed, top, sfDir,
+        results.size, hostJson, streamExtra))
     }
     spark.stop()
   }

@@ -33,16 +33,6 @@ object BenchJson {
       s""""threads":$threads,"mt_ms":${num(mtMs, 1)},""" +
       s""""eff":${num(eff, 2)},"disk32mb_ms":${num(diskMs, 1)}}"""
 
-  def retryRecord(q: String, original: Double, retry: Double, kept: Double,
-                  taintEvidence: Boolean, reason: String): String =
-    s"""{"q":"$q","original":${num(original, 3)},"retry":${num(retry, 3)},""" +
-      s""""kept":${num(kept, 3)},"taint_evidence":$taintEvidence,""" +
-      s""""reason":"$reason"}"""
-
-  def taintRecord(q: String, spinRatio: Double, steal: Long, iow: Long): String =
-    s"""{"q":"$q","spin_ratio":${num(spinRatio, 2)},""" +
-      s""""steal_jiffies":$steal,"iowait_jiffies":$iow}"""
-
   def sample(tsMs: Long, spinMs: Double, steal: Long, iow: Long): String =
     s"""[$tsMs,${num(spinMs, 1)},$steal,$iow]"""
 
@@ -58,33 +48,13 @@ object BenchJson {
     * 2× med; the r16 regression's signature was steal in the tens of
     * thousands with a broad spin inflation.
     */
-  /** `retryOrig`: (query, pre-substitution first-run seconds) for every
-    * retry that REPLACED its original — emitted as a `"retry_orig"` map so
-    * floor folds (tools/make_floors.py) can fold first-run values only.
-    * A retry runs in a JIT-warm JVM; its time is a valid pass-total
-    * adjudication but NOT a cold-first-run floor. Empty → key omitted,
-    * which also keeps the tail-sized compact line (whose caller passes
-    * Nil) within the driver's ~2 KB capture.
-    */
   def hostSummary(steal: Long, iowait: Long, medSpin: Double,
                   maxSpin: Double, nSamples: Int, effStart: Double,
-                  effEnd: Double, retries: Int, tainted: Int,
-                  runsPerQuery: Int,
-                  retryOrig: Seq[(String, Double)] = Nil): String = {
-    val orig =
-      if (retryOrig.isEmpty) ""
-      else retryOrig.map { case (q, v) => s""""$q":${num(v, 3)}""" }
-        .mkString(""","retry_orig":{""", ",", "}")
+                  effEnd: Double): String =
     s"""{"steal":$steal,"iowait":$iowait,"spin_med_ms":${num(medSpin, 0)},""" +
       s""""spin_max_ms":${num(maxSpin, 0)},"wd_n":$nSamples,""" +
-      s""""eff_start":${num(effStart, 1)},"eff_end":${num(effEnd, 1)},""" +
-      s""""retries":$retries,"tainted":$tainted,"runs_per_query":$runsPerQuery$orig}"""
-  }
+      s""""eff_start":${num(effStart, 1)},"eff_end":${num(effEnd, 1)}}"""
 
-  /** The LAST stdout line of a full run — must fit the driver's ~2 KB
-    * tail capture and parse standalone. `host` is [[hostSummary]]'s
-    * object, so a graded artifact carries its own weather evidence.
-    */
   /** One streaming-drain entry for the graded lines' `stream` object
     * (VERDICT r16 stretch 8; r17 item 6): input rows, drain wall, derived
     * rows/s, micro-batch count, and p50/p99 batch duration (ms) from the
@@ -98,22 +68,20 @@ object BenchJson {
       s""""rows_per_s":${num(if (secs > 0) rows / secs else -1.0, 0)},""" +
       s""""n_batches":$nBatches,"batch_ms_p50":$p50Ms,"batch_ms_p99":$p99Ms}"""
 
-  /** `firstRunTotal` (VERDICT r19 item 5): the pass total with every
-    * retry SUBSTITUTION undone — Σ first-run seconds, from `retry_orig` —
-    * so graded comparisons can use first-run totals the same way floor
-    * folds already do (a substituted retry runs in a JIT-warm JVM; its
-    * time is a valid stall adjudication for the pass total, but the
-    * first-run number must stay visible beside it, never only in the
-    * forensics file). Equal to `total` when nothing was substituted.
+  /** The LAST stdout line of a full run — must fit the driver's ~2 KB
+    * tail capture and parse standalone. `host` is [[hostSummary]]'s
+    * object, so a graded artifact carries its own weather evidence.
+    * `failed` counts the queries that threw: they are absent from `top`
+    * and from `total`, so without the count a pass with failures would
+    * read as a faster pass.
     */
-  def compactTotal(total: Double, firstRunTotal: Double,
+  def compactTotal(total: Double, failed: Int,
                    top: Seq[(String, Double)], sfDir: String,
                    nQueries: Int, host: String, extra: String = ""): String = {
     val tops = top.map { case (k, v) => s""""$k":${num(v, 3)}""" }
       .mkString("{", ",", "}")
-    s"""{"metric":"total","value":${num(total, 3)},""" +
-      s""""value_first_run":${num(firstRunTotal, 3)},"unit":"sec",""" +
-      s""""queries":$tops,"sf":"$sfDir","n_queries":$nQueries,""" +
+    s"""{"metric":"total","value":${num(total, 3)},"failed":$failed,""" +
+      s""""unit":"sec","queries":$tops,"sf":"$sfDir","n_queries":$nQueries,""" +
       s""""host":$host,$extra""" +
       """"queries_note":"top-20 of the full set by cost; complete map in """ +
       """target/bench.json, host forensics in target/bench_host.json"}"""

@@ -5,11 +5,11 @@ import org.apache.spark.sql.SparkSession
 /** Session-scoped single-build memo for query-shared artifacts (persisted
   * projections, side databases). A `persist()` inside a query function has
   * no unpersist hook once the lazy DataFrame is returned; without a memo,
-  * every invocation (e.g. 3 bench repeats) builds and pins a NEW copy —
-  * unbounded growth. Memoizing bounds the footprint to one artifact per
-  * key per LIVE session — the deliberate tradeoff everywhere this is used:
-  * a small documented projection pinned for the session, in exchange for
-  * single-scan plans.
+  * every invocation (e.g. the same query called twice in one session)
+  * builds and pins a NEW copy — unbounded growth. Memoizing bounds the
+  * footprint to one artifact per key per LIVE session — the deliberate
+  * tradeoff everywhere this is used: a small documented projection pinned
+  * for the session, in exchange for single-scan plans.
   *
   * Two structural properties (round-2 review findings):
   *  - the outer map holds sessions WEAKLY: a stopped-and-dropped
@@ -64,25 +64,14 @@ object Memo {
     * long suite runs was measurable: round-5 stage logs showed 37–46 s
     * of gcSum in single stages).
     *
-    * Non-Dataset artifacts (scratch-file paths, JDBC URLs) are kept by
-    * default: they hold no executor memory, and dropping them would make
+    * Non-Dataset artifacts (scratch-file paths, JDBC URLs) are kept: they
+    * hold no executor memory, and dropping them would make
     * the next reader re-write files that are still perfectly good.
     * Never-built holders are removed without forcing them — releasing
     * must not trigger the build it exists to undo. Unpersist blocks, so
     * the memory is actually free before the caller's next build starts.
-    *
-    * `dropKeptArtifacts = true` removes those non-Dataset entries too.
-    * This exists for exactly one caller: Bench's stall-retry loop, which
-    * must re-measure a query's FULL declared work. A kept scratch path /
-    * Derby connection / collected merge list lets a retry ride state no
-    * fresh-JVM first run could ever see — r19 caught retried q73/q74/
-    * q195/q94 measuring 0.04–0.15 s against 1.1–2.6 s real (the memo-ride
-    * pollution class; the fakes then self-perpetuated through the floor
-    * table's min-fold). Rebuilds are idempotent by construction: every
-    * such artifact is written to a FRESH temp dir at build time.
     */
-  def release(spark: SparkSession, prefix: String = "",
-              dropKeptArtifacts: Boolean = false): Unit = {
+  def release(spark: SparkSession, prefix: String = ""): Unit = {
     val m = bySession.synchronized { bySession.get(spark) }
     if (m != null) {
       val it = m.entrySet().iterator()
@@ -93,7 +82,7 @@ object Memo {
           else {
             val ds = datasets(e.getValue.value)
             ds.foreach(_.unpersist(blocking = true))
-            if (ds.nonEmpty || dropKeptArtifacts) it.remove()
+            if (ds.nonEmpty) it.remove()
           }
         }
       }

@@ -30,40 +30,17 @@ class BenchJsonSpec extends AnyFunSuite {
       assert(n1.get("st_ms").asDouble() == 201.5)
       assert(n1.get("eff").asDouble() == 25.78)
 
-      val retry = BenchJson.retryRecord("q47_asof_join", 4.183, 0.712, 0.712,
-        taintEvidence = false, reason = "floor_outlier")
-      val n2 = mapper.readTree(retry)
-      assert(n2.get("kept").asDouble() == 0.712)
-      assert(n2.get("reason").asText() == "floor_outlier")
-      assert(!n2.get("taint_evidence").asBoolean())
-
-      val taint = BenchJson.taintRecord("q92_pagerank", 3.456, 120L, 7L)
-      assert(mapper.readTree(taint).get("spin_ratio").asDouble() == 3.46)
-
       val sample = BenchJson.sample(99L, 123.46, 2L, 0L)
       val n4 = mapper.readTree(sample)
       assert(n4.isArray && n4.get(1).asDouble() == 123.5)
 
       val host = BenchJson.hostSummary(steal = 975L, iowait = 12L,
         medSpin = 156.4, maxSpin = 298.7, nSamples = 41, effStart = 25.7,
-        effEnd = 24.93, retries = 3, tainted = 2, runsPerQuery = 1)
+        effEnd = 24.93)
       val nh = mapper.readTree(host)
       assert(nh.get("steal").asLong() == 975L)
       assert(nh.get("spin_med_ms").asDouble() == 156.0)
       assert(nh.get("eff_end").asDouble() == 24.9)
-      assert(nh.get("retries").asInt() == 3)
-      assert(!nh.has("retry_orig"), "lean summary omits retry_orig")
-
-      // retry_orig (r19): the full line carries pre-substitution first-run
-      // seconds so floor folds never see a JIT-warm/memo-riding retry time
-      val hostFull = BenchJson.hostSummary(steal = 975L, iowait = 12L,
-        medSpin = 156.4, maxSpin = 298.7, nSamples = 41, effStart = 25.7,
-        effEnd = 24.93, retries = 3, tainted = 2, runsPerQuery = 1,
-        retryOrig = Seq("q73_jdbc_roundtrip" -> 1.94, "q195_bpe_merges" -> 2.578))
-      val nf = mapper.readTree(hostFull)
-      assert(nf.get("retry_orig").get("q73_jdbc_roundtrip").asDouble() == 1.94)
-      assert(nf.get("retry_orig").get("q195_bpe_merges").asDouble() == 2.578)
-      assert(nf.get("runs_per_query").asInt() == 1)
 
       val drain = BenchJson.drainRecord("q231_drain", 600000L, 4.27,
         nBatches = 4, p50Ms = 812L, p99Ms = 1460L)
@@ -74,16 +51,16 @@ class BenchJsonSpec extends AnyFunSuite {
       assert(nd.get("q231_drain").get("batch_ms_p50").asLong() == 812L)
       assert(nd.get("q231_drain").get("batch_ms_p99").asLong() == 1460L)
 
-      val compact = BenchJson.compactTotal(236.068, 241.5,
+      val compact = BenchJson.compactTotal(236.068, 2,
         Seq("q63_pipeline_transform" -> 6.824, "q126_triangles" -> 6.19),
         "/root/testdata/sf0.1", 237, host,
         extra = "\"stream\":{" + drain + "},")
       val n5 = mapper.readTree(compact)
       assert(n5.get("metric").asText() == "total")
       assert(n5.get("value").asDouble() == 236.068)
-      // VERDICT r19 item 5: the de-substituted (first-run-only) total
-      // rides the compact line next to the substituted one
-      assert(n5.get("value_first_run").asDouble() == 241.5)
+      // failed queries are left out of `value`, so their count rides
+      // the line: a pass with failures must not read as a faster pass
+      assert(n5.get("failed").asInt() == 2)
       assert(n5.get("queries").get("q63_pipeline_transform").asDouble() == 6.824)
       assert(n5.get("n_queries").asInt() == 237)
       // the graded artifact carries its own weather evidence (VERDICT r16
@@ -104,8 +81,7 @@ class BenchJsonSpec extends AnyFunSuite {
     // (q250_curriculum_phases_distributed) — use 40 for headroom.
     val host = BenchJson.hostSummary(steal = 1234567L, iowait = 99999L,
       medSpin = 21098.7, maxSpin = 99999.9, nSamples = 9999,
-      effStart = 31.99, effEnd = 31.99, retries = 20, tainted = 250,
-      runsPerQuery = 9)
+      effStart = 31.99, effEnd = 31.99)
     val drains = Seq(
       BenchJson.drainRecord("q231_drain", 999999999L, 9999.99, 9999,
         999999L, 999999L),
@@ -113,16 +89,18 @@ class BenchJsonSpec extends AnyFunSuite {
         999999L, 999999L))
       .mkString("\"stream\":{", ",", "},")
     val top = (1 to 20).map(i => f"q$i%03d_" + "x" * 34 -> 99999.999)
-    val line = BenchJson.compactTotal(99999.999, 99999.999, top,
+    val line = BenchJson.compactTotal(99999.999, 250, top,
       "/root/testdata/sf0.1", 250, host, drains)
-    assert(mapper.readTree(line).get("queries").size() == 20)
+    val n = mapper.readTree(line)
+    assert(n.get("queries").size() == 20)
+    assert(n.get("failed").asInt() == 250)
     assert(line.length < 2000, s"compact line ${line.length}B busts the tail budget")
   }
 
   test("no global locale mutation: default is untouched after emission") {
     underLocale(Locale.GERMANY) {
-      BenchJson.compactTotal(1.0, 1.0, Seq("q" -> 1.0), "sf", 1,
-        BenchJson.hostSummary(0L, 0L, 1.0, 1.0, 0, 1.0, 1.0, 0, 0, 1))
+      BenchJson.compactTotal(1.0, 0, Seq("q" -> 1.0), "sf", 1,
+        BenchJson.hostSummary(0L, 0L, 1.0, 1.0, 0, 1.0, 1.0))
       assert(Locale.getDefault == Locale.GERMANY)
     }
   }

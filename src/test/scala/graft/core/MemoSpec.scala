@@ -39,6 +39,13 @@ class MemoSpec extends SparkTestBase {
       Seq(1).toDF("x").persist(StorageLevel.MEMORY_AND_DISK)
     }
     other.count()
+    // a holder whose build threw was never built: release must drop it
+    // without forcing it, or the build's failure rethrows from release
+    intercept[IllegalStateException] {
+      Memo.cached[String](spark, "memospec-broken") {
+        throw new IllegalStateException("build failed")
+      }
+    }
 
     Memo.release(spark, "memospec-")
     assert(other.storageLevel != StorageLevel.NONE,
@@ -49,22 +56,5 @@ class MemoSpec extends SparkTestBase {
     Memo.release(spark) // full release for the other family
     assert(other.storageLevel == StorageLevel.NONE)
     assert(otherBuilds == 1)
-  }
-
-  test("dropKeptArtifacts removes non-dataset entries so a retry re-does " +
-      "the declared work (r19 memo-ride fix)") {
-    var pathBuilds = 0
-    def path() = { pathBuilds += 1; s"/tmp/memospec-retry-$pathBuilds" }
-    Memo.cached(spark, "memospec-retry-path") { path() }
-    // plain release keeps it (the documented default)
-    Memo.release(spark, "memospec-retry-")
-    Memo.cached(spark, "memospec-retry-path") { path() }
-    assert(pathBuilds == 1, "plain release keeps path artifacts")
-    // the retry-loop release drops it: next access REBUILDS — without
-    // this, a retried q73/q74/q195 rides the kept conn/path/merge-list
-    // and measures ~nothing (0.04-0.15 s vs 1.1-2.6 s declared work)
-    Memo.release(spark, "memospec-retry-", dropKeptArtifacts = true)
-    Memo.cached(spark, "memospec-retry-path") { path() }
-    assert(pathBuilds == 2, "dropKeptArtifacts must force a full rebuild")
   }
 }

@@ -1,8 +1,7 @@
 #!/usr/bin/env bash
-# Floor-protocol bench runner (BASELINE.md): fresh JVM per pass, direct
-# java (no sbt), fixed heap -Xms=-Xmx (default 48g — the configuration
-# every recorded floor used, and since round 9 also build.sbt's forked
-# default so the driver's graded pass measures the same thing).
+# Bench runner (BASELINE.md): fresh JVM per pass, direct java (no sbt),
+# fixed heap -Xms=-Xmx (default 16g; the comment above the java command
+# says why not more).
 #
 # Usage:
 #   tools/bench.sh                         # full pass, sf0.1, local[32]

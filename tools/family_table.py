@@ -1,11 +1,12 @@
 #!/usr/bin/env python3
-"""Per-family scale table: joins a bench JSON (per-query seconds) against
-tools/floors.json (sf0.1 per-query floor) and prints the BASELINE-style
-family table plus the worst per-query ratios.
+"""Per-family table: groups a bench JSON's per-query seconds by
+SparkEntry.defGroups family and prints the BASELINE-style family table.
 
-Usage: python3 tools/family_table.py <bench.json> [prev_bench.json]
-With prev_bench.json (e.g. the 30x pass), also prints family ratios
-between the two benches.
+Usage: python3 tools/family_table.py <bench.json> [baseline_bench.json]
+With one file it prints per-family totals only. With a baseline bench
+(e.g. the parent commit's target/bench.json, or the sf0.1 pass when
+reading a 30x pass), it adds the baseline column, per-family ratios and
+the worst per-query ratios against it.
 """
 import json, re, sys, collections
 
@@ -38,44 +39,38 @@ def qfam():
 
 def main():
     bench = json.load(open(sys.argv[1]))["queries"]
-    prev = json.load(open(sys.argv[2]))["queries"] if len(sys.argv) > 2 else None
-    floors = json.load(open(pathlib.Path(__file__).parent / "floors.json"))
+    base = json.load(open(sys.argv[2]))["queries"] if len(sys.argv) > 2 else None
     fam = qfam()
-    rows = collections.defaultdict(lambda: [0, 0.0, 0.0, 0.0])  # n, floor, cur, prev
+    rows = collections.defaultdict(lambda: [0, 0.0, 0.0])  # n, cur, base
     missing = []
     for q, s in bench.items():
         f = fam.get(q)
         if f is None:
             missing.append(q); continue
         r = rows[f]
-        r[0] += 1; r[2] += s
-        r[1] += floors.get(q, 0.0)
-        if prev: r[3] += prev.get(q, 0.0)
-    tf = tc = tp = 0.0; tn = 0
-    hdr = "| family | n | floor0.1 (s) | cur (s) | cur/floor |"
-    if prev: hdr += " prev (s) | cur/prev |"
+        r[0] += 1; r[1] += s
+        if base: r[2] += base.get(q, 0.0)
+    tn = 0; tc = tb = 0.0
+    hdr = "| family | n | cur (s) |"
+    if base: hdr += " base (s) | cur/base |"
     print(hdr)
-    print("|---|---|---|---|---|" + ("---|---|" if prev else ""))
-    for f, (n, fl, cu, pv) in sorted(rows.items(), key=lambda kv: -kv[1][2] / max(kv[1][1], 1e-9)):
-        tn += n; tf += fl; tc += cu; tp += pv
-        line = f"| {f} | {n} | {fl:.2f} | {cu:.2f} | {cu/max(fl,1e-9):.2f}x |"
-        if prev: line += f" {pv:.2f} | {cu/max(pv,1e-9):.2f}x |"
+    print("|---|---|---|" + ("---|---|" if base else ""))
+    order = (lambda kv: -kv[1][1] / max(kv[1][2], 1e-9)) if base else (lambda kv: -kv[1][1])
+    for f, (n, cu, bs) in sorted(rows.items(), key=order):
+        tn += n; tc += cu; tb += bs
+        line = f"| {f} | {n} | {cu:.2f} |"
+        if base: line += f" {bs:.2f} | {cu/max(bs,1e-9):.2f}x |"
         print(line)
-    line = f"| **total** | **{tn}** | **{tf:.2f}** | **{tc:.2f}** | **{tc/tf:.2f}x** |"
-    if prev: line += f" **{tp:.2f}** | **{tc/tp:.2f}x** |"
+    line = f"| **total** | **{tn}** | **{tc:.2f}** |"
+    if base: line += f" **{tb:.2f}** | **{tc/max(tb,1e-9):.2f}x** |"
     print(line)
     if missing: print("unmapped:", missing)
-    print("\nworst per-query vs floor:")
-    ratios = sorted(((s / max(floors.get(q, 0.0), 1e-9), q, floors.get(q, 0.0), s)
-                     for q, s in bench.items()), reverse=True)[:12]
-    for r, q, f, s in ratios:
-        print(f"  {q}: {f:.2f} -> {s:.2f}  ({r:.1f}x)")
-    if prev:
-        print("\nworst per-query vs prev:")
-        ratios = sorted(((s / max(prev.get(q, 0.0), 1e-9), q, prev.get(q, 0.0), s)
-                         for q, s in bench.items() if q in prev), reverse=True)[:12]
-        for r, q, p, s in ratios:
-            print(f"  {q}: {p:.2f} -> {s:.2f}  ({r:.1f}x)")
+    if base:
+        print("\nworst per-query vs base:")
+        ratios = sorted(((s / max(base.get(q, 0.0), 1e-9), q, base.get(q, 0.0), s)
+                         for q, s in bench.items() if q in base), reverse=True)[:12]
+        for r, q, b, s in ratios:
+            print(f"  {q}: {b:.2f} -> {s:.2f}  ({r:.1f}x)")
 
 if __name__ == "__main__":
     main()
