@@ -198,10 +198,6 @@ object MetricsJob {
         Exact.davg(col("item_quantity")).as("qty_mean"),
         count(lit(1)).as("n_obs"))
 
-  /** All nine families keyed by subject, ready for partitioned writes. */
-  def all(finalDf: DataFrame): Map[String, DataFrame] =
-    allFromBase(revenueBase(finalDf))
-
   /** The fan-out over an ALREADY-BUILT [[revenueBase]] — callers that
     * materialize several outputs should persist that base first (the
     * reference's own idiom, `go-transform-elt.py:338`) so the eleven

@@ -27,7 +27,7 @@ object QualityJob {
     *                      partitioned by `severity` gets finalDf and
     *                      quarantine as partition-pruned READS of that
     *                      store instead of two recomputes of the chain
-    *                      (the 100-TB layout; PipelineWall ships it)
+    *                      (the 100-TB layout; PipelineRunner ships it)
     * @param finalDf      full canonical rows, severity != high — NOT cached;
     *                      intended to stream straight to its sink
     * @param quarantine   full canonical rows, severity == high — NOT cached

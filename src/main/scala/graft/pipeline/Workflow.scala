@@ -32,18 +32,21 @@ object Workflow {
   }
 
   /** Terminal state of one stage in one workflow run. `attempts` counts
-    * executions (1 + retries used); a SKIPPED stage has 0.
+    * executions (1 + retries used); a SKIPPED stage has 0. `wallMs` is the
+    * wall time of all attempts.
     */
   final case class StageRun(
       stage: String,
       state: String, // SUCCEEDED | FAILED | SKIPPED
       attempts: Int,
-      error: Option[String])
+      error: Option[String],
+      wallMs: Long)
 
   /** Run the DAG; returns one [[StageRun]] per stage in execution order
     * (skipped stages appear where they would have run). Optionally writes
     * the ledger as JSON to `ledgerPath` — the S8 manifest convention, so
-    * an operator can see which stage consumed the retry budget.
+    * an operator can see which stage consumed the retry budget and the
+    * wall time.
     */
   def run(stages: Seq[StageDef], ledgerPath: Option[String] = None): Seq[StageRun] = {
     val byName = stages.map(s => s.name -> s).toMap
@@ -70,8 +73,9 @@ object Workflow {
     val ledger = order.map { s =>
       if (!s.dependsOn.forall(d => states(d) == "SUCCEEDED")) {
         states(s.name) = "SKIPPED"
-        StageRun(s.name, "SKIPPED", 0, None)
+        StageRun(s.name, "SKIPPED", 0, None, 0L)
       } else {
+        val t0 = System.nanoTime()
         var attempt = 0
         var err: Option[Throwable] = None
         var succeeded = false
@@ -82,7 +86,7 @@ object Workflow {
         }
         val state = if (succeeded) "SUCCEEDED" else "FAILED"
         states(s.name) = state
-        StageRun(s.name, state, attempt, err.map(_.toString))
+        StageRun(s.name, state, attempt, err.map(_.toString), (System.nanoTime() - t0) / 1000000)
       }
     }.toSeq
 
@@ -90,6 +94,7 @@ object Workflow {
       def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
       val json = ledger.map(r =>
         s"""{"stage":${q(r.stage)},"state":"${r.state}","attempts":${r.attempts}""" +
+          s""","wall_ms":${r.wallMs}""" +
           r.error.map(e => s""","error":${q(e.take(500))}""").getOrElse("") + "}")
         .mkString("[", ",", "]")
       val path = java.nio.file.Paths.get(p)

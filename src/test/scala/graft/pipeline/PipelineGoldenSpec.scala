@@ -75,7 +75,7 @@ class PipelineGoldenSpec extends SparkTestBase {
 
   private lazy val result = {
     val out = s"$fixtureDir/out"
-    val r = PipelineRunner.run(spark, itemsCsv, optionsCsv, dateDimCsv, thresholds, out)
+    val r = PipelineRunner.run(spark, itemsCsv, optionsCsv, dateDimCsv, _ => thresholds, out)
     (r, out)
   }
 
@@ -115,6 +115,18 @@ class PipelineGoldenSpec extends SparkTestBase {
     assert(rows(dict) == rows(rowwise))
   }
 
+  test("ingest: each landing table's declared columns are typed, the rest stay strings") {
+    def types(t: String) = spark.read.parquet(s"${result._2}/landing/$t").schema
+      .fields.map(f => f.name -> f.dataType.simpleString).toMap
+    val dd = types("date_dim")
+    assert(dd("week") == "int" && dd("year") == "int" && dd("is_weekend") == "boolean")
+    assert(dd("day_of_week") == "string" && dd("date_key") == "string")
+    val items = types("order_items")
+    assert(items("item_price") == "double" && items("item_quantity") == "int" &&
+      items("is_loyalty") == "boolean" && items("order_id") == "string")
+    assert(types("order_item_options")("option_price") == "double")
+  }
+
   test("quality: rule quarantines, threshold severity, option + date enrichment") {
     val out = result._2
     val price = spark.read.parquet(s"$out/quality/price")
@@ -124,8 +136,8 @@ class PipelineGoldenSpec extends SparkTestBase {
       .select("lineitem_id").as[String].collect().toSet
     assert(qty == Set("li10", "li11"), s"qty issues: $qty") // =1, >47
 
-    val fin = spark.read.parquet(s"$out/final")
-    val quar = spark.read.parquet(s"$out/quality/final")
+    val fin = spark.read.parquet(s"$out/canonical").filter($"severity" =!= "high")
+    val quar = spark.read.parquet(s"$out/canonical").filter($"severity" === "high")
     val finLis = fin.select("lineitem_id").as[String].collect().toSet
     val quarLis = quar.select("lineitem_id").as[String].collect().toSet
     assert(quarLis == Set("li13"), "2 threshold violations ⇒ high ⇒ quarantine")
@@ -170,7 +182,7 @@ class PipelineGoldenSpec extends SparkTestBase {
     }
     val (items, opts, dates) = (copy(itemsCsv), copy(optionsCsv), copy(dateDimCsv))
     val out = s"$dir/out"
-    PipelineRunner.run(spark, items, opts, dates, thresholds, out,
+    PipelineRunner.run(spark, items, opts, dates, _ => thresholds, out,
       archiveTo = Some(s"$dir/processed"))
     assert(!Files.exists(Paths.get(items)), "landing CSV moved away")
     assert(Files.exists(Paths.get(s"$dir/processed/order_items.csv")),
@@ -184,11 +196,11 @@ class PipelineGoldenSpec extends SparkTestBase {
         |alltown,r1,2023-03-08T11:03:32.223Z,o1,u1,,true,USD,li1,TEST stuff,Item,5.0,2
         |""")
     val r2 = PipelineRunner.run(spark, allTest, s"$dir/processed/order_item_options.csv",
-      s"$dir/processed/date_dim.csv", thresholds, out)
+      s"$dir/processed/date_dim.csv", _ => thresholds, out)
     assert(r2.stages.find(_.stage == "transform").get.rows == 0L)
     assert(spark.read.parquet(s"$out/transform/order_items").count() == 0,
       "stale transform rows must be cleared on an empty re-run")
-    assert(spark.read.parquet(s"$out/final").count() == 0,
+    assert(spark.read.parquet(s"$out/canonical").filter($"severity" =!= "high").count() == 0,
       "stale final rows must be cleared on an empty re-run")
   }
 

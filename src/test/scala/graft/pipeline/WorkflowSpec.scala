@@ -68,4 +68,19 @@ class WorkflowSpec extends AnyFunSuite {
     assert(json.contains("\"state\":\"FAILED\"") && json.contains("x\\\"y"))
     assert(json.contains("\"stage\":\"after\",\"state\":\"SKIPPED\",\"attempts\":0"))
   }
+
+  test("the ledger records each stage's wall ms") {
+    val p = java.nio.file.Files.createTempDirectory("graft-wf").toString + "/ledger.json"
+    val ledger = Workflow.run(Seq(
+      StageDef("slow")(() => Thread.sleep(50)),
+      StageDef("bad", Seq("slow"))(() => sys.error("x")),
+      StageDef("after", Seq("bad"))(() => ())), ledgerPath = Some(p))
+    val ms = ledger.map(r => r.stage -> r.wallMs).toMap
+    assert(ms("slow") >= 50 && ms("after") == 0)
+    val json = java.nio.file.Files.readString(java.nio.file.Paths.get(p))
+    assert(json.contains("\"stage\":\"slow\",\"state\":\"SUCCEEDED\",\"attempts\":1," +
+      "\"wall_ms\":" + ms("slow")))
+    assert(json.contains("\"stage\":\"after\",\"state\":\"SKIPPED\",\"attempts\":0," +
+      "\"wall_ms\":0"))
+  }
 }
