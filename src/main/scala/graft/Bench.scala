@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — driver contract: exactly ONE stdout line carries
   * `"metric":"total"` — on full runs it is the LAST line, compact enough
   * (~0.8 KB: total + top-20 queries + artifact pointers) to survive a
@@ -101,28 +99,12 @@ object Bench {
     // item 7). Stderr [cal]/[stage] diagnostics keep the f-interpolator:
     // human-facing, not part of any parse contract.
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val scratch = shmScratch(sfDir)
     scratch.foreach { r =>
       new java.io.File(r, "tmp").mkdirs()
       System.setProperty("java.io.tmpdir", s"$r/tmp")
     }
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // A/B knob (r20, default = Spark's default true): with
-      // parallelismFirst=false AQE coalesces reduce partitions toward
-      // advisoryPartitionSizeInBytes instead of core count — the guide
-      // §2.2 scale posture. Env-gated so the same binary can A/B it
-      // without a recompile.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PF", "true"))
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-    scratch.foreach(r => builder.config("spark.local.dir", s"$r/local"))
-    val spark = builder.getOrCreate()
+    val spark = graft.core.LocalSession(localDir = scratch.map(r => s"$r/local"))
     spark.sparkContext.setLogLevel("WARN")
 
     // SPARK_GRAFT_STAGE_LOG=1: per-stage wall times to stderr — attribution
@@ -365,7 +347,7 @@ object Bench {
       val sampleJson = samples.map { case (ts, ms, st, io) =>
         BenchJson.sample(ts, ms, st, io) }
       val host =
-        s"""{"ts_ms":${System.currentTimeMillis()},"sf":"$sfDir","cpus":$cpus,
+        s"""{"ts_ms":${System.currentTimeMillis()},"sf":"$sfDir","cpus":${spark.sparkContext.defaultParallelism},
            |"heap_max_mb":${Runtime.getRuntime.maxMemory() >> 20},
            |"tmpfs_scratch":${scratch.isDefined},
            |"total_sec":$total,

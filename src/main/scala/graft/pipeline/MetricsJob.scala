@@ -62,14 +62,11 @@ object MetricsJob {
     */
   def clvBuckets(base: DataFrame,
       mode: graft.ops.Percentiles.Mode = graft.ops.Percentiles.Exact): DataFrame = {
-    // checkpoint: perCust feeds BOTH the threshold broadcast build and
-    // the final probe — un-persisted, the base scan + agg executed twice
-    // (broadcast builds don't share exchanges; q151/q139 pattern).
-    // Customer-grain and reused — the guide-§5 persist case.
+    // perCust feeds both the threshold build and the probe: AQE reuses its
+    // exchange, over the base the caller persisted (see allFromBase)
     val perCust = nonGuest(base)
       .groupBy(col("restaurant_id"), col("customer_id"))
       .agg(Exact.dsum(col("revenue")).as("clv"))
-      .localCheckpoint(true)
     val m = graft.ops.Percentiles.resolve(perCust, Seq(col("restaurant_id")), mode)
     // one array-percentile buffer per restaurant instead of two (each
     // scalar pctl buffered the group's values independently — round-19)

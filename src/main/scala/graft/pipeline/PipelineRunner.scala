@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.ParquetReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -295,8 +293,7 @@ object PipelineRunner {
     val json = manifest.map(s =>
       s"""{"stage":"${s.stage}","rows":${s.rows},"path":"${s.path}"}""")
       .mkString("[", ",", "]")
-    Files.createDirectories(Paths.get(outRoot))
-    Files.write(Paths.get(manifestPath), json.getBytes(StandardCharsets.UTF_8))
+    Workflow.writeText(manifestPath, json, spark.sparkContext.hadoopConfiguration)
 
     val failed = ledger.filter(_.state != "SUCCEEDED")
     if (failed.nonEmpty)

@@ -1,6 +1,11 @@
 package graft.pipeline
 
+import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
+import scala.util.Using
 
 /** Control-plane analog of the reference's Glue WORKFLOW
   * (`cloudformation/06_glueworkflow.yml`): a start trigger kicks the first
@@ -97,10 +102,17 @@ object Workflow {
           s""","wall_ms":${r.wallMs}""" +
           r.error.map(e => s""","error":${q(e.take(500))}""").getOrElse("") + "}")
         .mkString("[", ",", "]")
-      val path = java.nio.file.Paths.get(p)
-      Option(path.getParent).foreach(java.nio.file.Files.createDirectories(_))
-      java.nio.file.Files.writeString(path, json)
+      val conf = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+        .fold(new Configuration())(_.sparkContext.hadoopConfiguration)
+      writeText(p, json, conf)
     }
     ledger
+  }
+
+  /** Write `text` through the path's own Hadoop FileSystem: `java.nio` reads
+    * a `file:/…` path as a relative directory under the working directory. */
+  private[pipeline] def writeText(path: String, text: String, conf: Configuration): Unit = {
+    val p = new Path(path)
+    Using.resource(p.getFileSystem(conf).create(p, true))(_.write(text.getBytes(UTF_8)))
   }
 }

@@ -4,7 +4,6 @@ import java.util.Locale
 
 import graft.sources.{Jdbc, SimJdbc}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
 
 /** JDBC wire-model scaling rows (VERDICT r15 item 4). The sandbox ships no
   * client-server JDBC stack (no derbynet/derbyclient implementation
@@ -42,13 +41,7 @@ object JdbcWire {
     val writeRows = args.lift(1).map(_.toLong).getOrElse(1500000L)
     val rowMicros = args.lift(2).map(_.toDouble).getOrElse(2.0)
     val rtMicros = args.lift(3).map(_.toLong).getOrElse(500L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.LocalSession()
     spark.sparkContext.setLogLevel("WARN")
 
     val rowNanos = (rowMicros * 1000).toLong

@@ -3,7 +3,7 @@ package graft.tools
 import java.util.Locale
 
 import graft.pipeline.PipelineRunner
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** Glue-parity END-TO-END pipeline wall clock (VERDICT r14 stretch item 8):
   * one number for the full Ingest→Transform→Quality→Metrics chain plus the
@@ -14,8 +14,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * This intentionally does NOT reuse q63–q72's memoized single-session
   * artifacts: every stage pays its real read + compute + write, so the
   * number is comparable to the reference's 4-job capacity facts
-  * (BASELINE.md:12-16 — 10 G.1X workers = 40 vCPU per job; this box is
-  * local[32]).
+  * (BASELINE.md:12-16 — 10 G.1X workers = 40 vCPU per job; the wall runs
+  * at `graft.core.LocalSession`'s core count, every core by default).
   *
   * Untimed producer setup: the synthetic order_items/options/date_dim CSVs
   * (PipelineQ's generators — the same feed the q63 gate uses) land in
@@ -32,22 +32,14 @@ object PipelineWall {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outRoot = args.lift(1).getOrElse("target/pipeline_wall")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      // finer scan splits than the 128 MB default: the wall's stages are
-      // scan→compute map chains, so scan splits ARE the compute
-      // parallelism — at 30× the 2 GB landing parquet would otherwise
-      // split 16-way on a 32-thread box (half the cores idle through the
-      // regex chain). 64 MB keeps every stage core-bound at the measured
-      // scale points while costing nothing at sf0.1.
-      .config("spark.sql.files.maxPartitionBytes", s"${64 * 1024 * 1024}")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.LocalSession()
+    // finer scan splits than the 128 MB default: the wall's stages are
+    // scan→compute map chains, so scan splits ARE the compute
+    // parallelism — at 30× the 2 GB landing parquet would otherwise
+    // split 16-way on a 32-thread box (half the cores idle through the
+    // regex chain). 64 MB keeps every stage core-bound at the measured
+    // scale points while costing nothing at sf0.1.
+    spark.conf.set("spark.sql.files.maxPartitionBytes", s"${64 * 1024 * 1024}")
     spark.sparkContext.setLogLevel("WARN")
 
     // ---- untimed producer setup: CSVs into the landing zone

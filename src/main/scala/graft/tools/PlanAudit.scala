@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints formatted physical plans for representative queries so scale
   * properties are auditable: PushedFilters reaching the parquet scan, pruned
   * ReadSchema, BroadcastHashJoin on dims, WholeStageCodegen coverage, no
@@ -15,12 +13,7 @@ object PlanAudit {
     val names = if (args.length > 1) args.tail.toSeq
       else Seq("q01_pricing_summary", "q03_region_rollup", "q14_top_nations",
         "q19_incremental_slice", "q37_minhash_pairs", "q40_ann_topk")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
     // SPARK_GRAFT_RUN=1: execute each query (noop sink) first and print
     // the AQE FINAL plan — ReusedExchange/ReusedSubquery and runtime join

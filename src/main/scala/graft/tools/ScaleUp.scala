@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Generates a larger synthetic scale factor from an existing one by
   * replicating the FACT tables `factor`× with disjoint key spaces, so plan
@@ -119,13 +119,7 @@ object ScaleUp {
     // and silently break the disjoint-shingle guarantee. Id strides bound
     // the per-copy key spaces well above 312 on every driver SF.
     require(factor >= 1 && factor <= 312, s"factor ($factor) must be in [1, 312]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.LocalSession()
     spark.sparkContext.setLogLevel("WARN")
 
     def write(df: DataFrame, name: String): Unit =

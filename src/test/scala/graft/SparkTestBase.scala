@@ -3,20 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (getOrCreate → one JVM-wide session;
-  * Test / fork := true keeps it isolated from sbt).
+/** Shared local session for all suites, built by [[graft.core.LocalSession]]
+  * — the settings `graft.Bench` is graded under — at four cores
+  * (getOrCreate → one JVM-wide session; Test / fork := true keeps it
+  * isolated from sbt).
   */
 trait SparkTestBase extends AnyFunSuite {
   @transient lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
+    val s = graft.core.LocalSession(cores = 4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -14,6 +14,9 @@ class BucketedJoinSpec extends SparkTestBase {
 
   test("bucketed tables join without a shuffle exchange") {
     // warehouse dir is a static conf, set in SparkTestBase
+    // restore the shared session's own value (or unset), never a literal:
+    // a literal would pin the threshold for every later suite
+    val prevThreshold = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force non-broadcast
     try {
       val orders = spark.read.parquet(s"$sf/orders.parquet")
@@ -44,7 +47,10 @@ class BucketedJoinSpec extends SparkTestBase {
     } finally {
       spark.sql("DROP TABLE IF EXISTS orders_b")
       spark.sql("DROP TABLE IF EXISTS lineitem_b")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", 10 * 1024 * 1024)
+      prevThreshold match {
+        case Some(v) => spark.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
+        case None => spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      }
     }
   }
 }

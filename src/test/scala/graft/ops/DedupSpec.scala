@@ -90,6 +90,9 @@ class DedupSpec extends SparkTestBase {
     // that key — the join reads the store with NO exchange; only the
     // new batch aggregates/shuffles. Pair results must equal the
     // union-formulation incrementalPairs.
+    // restore the shared session's own value (or unset), never a literal:
+    // a literal would pin the threshold for every later suite
+    val prevThreshold = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val corpus = Seq(
@@ -143,7 +146,10 @@ class DedupSpec extends SparkTestBase {
       assert(viaJoin == viaUnion, s"join formulation diverged: $viaJoin vs $viaUnion")
     } finally {
       spark.sql("DROP TABLE IF EXISTS fp_store_b")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", 10 * 1024 * 1024)
+      prevThreshold match {
+        case Some(v) => spark.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
+        case None => spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      }
     }
   }
 

@@ -106,6 +106,23 @@ class PipelineChainSpec extends SparkTestBase {
     assert(manifest.contains("\"stage\":\"transform\"") && !manifest.contains("metrics_"))
   }
 
+  test("a file: URI out root puts the manifest and the ledger beside its layers") {
+    val local = Files.createTempDirectory("graft-chain-uri")
+    val out = local.toUri.toString.stripSuffix("/")
+    assert(out.startsWith("file:"))
+    intercept[IllegalStateException] {
+      PipelineRunner.run(spark, itemsCsv, optionsCsv, dateDimCsv,
+        _ => sys.error("no thresholds"), out)
+    }
+    assert(Files.isDirectory(local.resolve("transform/order_items")))
+    val ledger = local.resolve("workflow_ledger.json")
+    val manifest = local.resolve("run_manifest.json")
+    assert(Files.isRegularFile(ledger), s"no ledger at $ledger")
+    assert(Files.isRegularFile(manifest), s"no manifest at $manifest")
+    assert(Files.readString(ledger).contains("\"stage\":\"quality_elt\",\"state\":\"FAILED\""))
+    assert(Files.readString(manifest).contains("\"stage\":\"transform\""))
+  }
+
   test("write sizing reads bytes through the path's FileSystem: file: URI = plain path") {
     // a sparse 100 MB file: three 32 MB steps above the 1-task floor, no disk used
     val sized = Files.createTempDirectory("graft-sizing")

@@ -83,4 +83,12 @@ class WorkflowSpec extends AnyFunSuite {
     assert(json.contains("\"stage\":\"after\",\"state\":\"SKIPPED\",\"attempts\":0," +
       "\"wall_ms\":0"))
   }
+
+  test("a file: URI ledger path lands at that path") {
+    val d = java.nio.file.Files.createTempDirectory("graft-wf")
+    Workflow.run(Seq(StageDef("ok")(() => ())),
+      ledgerPath = Some(d.toUri.toString + "sub/ledger.json"))
+    val json = java.nio.file.Files.readString(d.resolve("sub/ledger.json"))
+    assert(json.contains("\"stage\":\"ok\",\"state\":\"SUCCEEDED\""))
+  }
 }
