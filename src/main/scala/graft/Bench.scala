@@ -302,8 +302,8 @@ object Bench {
     }
     // Streaming-drain throughput (VERDICT r16 stretch 8): q231/q232's
     // graded seconds are mostly AvailableNow harness fixed cost — the
-    // artifact records the drains' rows/s so throughput is visible
-    // without a separate StreamBench run. Empty when no parity query ran.
+    // artifact records the drains' rows/s so throughput is visible in the
+    // graded run itself. Empty when no parity query ran.
     val streamExtra = {
       val s = graft.streaming.DrainStats.snapshot
       if (s.isEmpty) ""

@@ -33,11 +33,17 @@ object GraftFunctions {
       FirstMatchLabel(exprs(0), strings(exprs(1)), strings(exprs(2)))
     }))
 
-  def register(spark: SparkSession): Unit =
+  /** Register each function the session's registry lacks. Re-registering
+    * a present one would replace it with an identical builder and log a
+    * `replaced a previously registered function` WARN per call.
+    */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     functions.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
+  }
 
   /** Register into both the thread-active and the default session — a plan
     * built on one thread may be analyzed by a session owned by another

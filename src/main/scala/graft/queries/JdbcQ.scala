@@ -25,9 +25,10 @@ object JdbcQ {
     // the parquet at first call (testdata is immutable within a harness
     // session — mutate it and the memo would serve a stale mirror), and
     // the embedded engine stays live until the JVM exits (Derby has no
-    // per-database close short of a JVM-wide shutdown)
+    // per-database close short of a JVM-wide shutdown); its Scratch dir is
+    // deleted at exit
     val conn = graft.core.Memo.cached(spark, s"jdbc-mirror:$dir") {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-derby").toString
+      val tmp = graft.core.Scratch.dir("graft-derby")
       System.setProperty("derby.stream.error.file", s"$tmp/derby.log")
       // territory pinned in the URL: Derby derives the new database's
       // locale from the JVM default otherwise, and under Bench's

@@ -20,7 +20,7 @@ object LayoutQ {
     // one re-laid-out copy per (session, sf dir) — repeated invocations
     // read the same files instead of rewriting a fresh temp copy each time
     val tmp = graft.core.Memo.cached(spark, s"q74-layout:$dir") {
-      val p = java.nio.file.Files.createTempDirectory("graft-layout").toString + "/li"
+      val p = graft.core.Scratch.dir("graft-layout") + "/li"
       // timestamps cross the layout boundary as unix_micros longs (the
       // suite's determinism rule — also sidesteps TIMESTAMP_NTZ inference)
       Layout.sortedWrite(

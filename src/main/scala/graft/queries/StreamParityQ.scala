@@ -2,8 +2,7 @@ package graft.queries
 
 import graft.{Oracles, QueryDef}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Oracle-gated batch↔streaming parity: the production streaming shapes
   * ([[graft.streaming.EventStreams]]) promoted into the graded query set,
@@ -26,12 +25,20 @@ object StreamParityQ {
     */
   private val StageParts = 8
 
-  /** Scoped streaming conf for one drain's lifetime; ALWAYS restores the
-    * previous values — the restore is in `finally` (ADVICE r17): if the
-    * drain throws or the awaitTermination `require` fails, a leaked
-    * setting would silently tax every subsequent query in the session.
+  /** Drain `stream` to a batch_id-partitioned update log in a fresh
+    * [[graft.core.Scratch]] dir through
+    * [[graft.streaming.EventStreams.incrementalParquetSink]] (Update mode,
+    * AvailableNow, idempotent per-batch replay), record the drain's stats
+    * as `<name>_drain` in [[graft.streaming.DrainStats]], and return the
+    * log path.
+    *
+    * The streaming conf is scoped to the drain's lifetime and ALWAYS
+    * restored — the restore is in `finally` (ADVICE r17): if the drain
+    * throws or the awaitTermination `require` fails, a leaked setting would
+    * silently tax every subsequent query in the session.
     *  - `numRecentProgressUpdates=1000`: past the default 100 the
-    *    drain-stats row sum would silently undercount.
+    *    drain-stats row sum would silently undercount (4 batches today;
+    *    the headroom covers any future finer staging).
     *  - `shuffle.partitions=StageParts`: state partitioning is baked into
     *    the checkpoint at stream start, so it must be set HERE; see
     *    [[StageParts]] for the sizing argument and A/B.
@@ -42,18 +49,30 @@ object StreamParityQ {
     *    emit nothing — it only costs a full plan+schedule cycle per drain
     *    (r19 A/B: −1.3 s on q231, −0.9 s on q232, byte-identical output).
     */
-  private def withRaisedProgressCap[A](spark: SparkSession)(body: => A): A = {
+  private def drainToLog(spark: SparkSession, name: String,
+      stream: DataFrame): String = {
+    val tmp = graft.core.Scratch.dir(s"graft-$name")
     val keys = Seq(
       "spark.sql.streaming.numRecentProgressUpdates" -> "1000",
       "spark.sql.shuffle.partitions" -> StageParts.toString,
       "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
     val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
     keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
+    try {
+      val t0 = System.nanoTime()
+      val drain = graft.streaming.EventStreams
+        .incrementalParquetSink(stream, s"$tmp/log", s"$tmp/ckpt")
+      require(drain.awaitTermination(600000),
+        s"$name streaming drain did not terminate within 10 minutes")
+      graft.streaming.DrainStats.record(s"${name}_drain",
+        drain.recentProgress.map(_.numInputRows).sum,
+        (System.nanoTime() - t0) / 1e9,
+        drain.recentProgress.toSeq.map(_.batchDuration))
+    } finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+    s"$tmp/log"
   }
 
   /** Stage the events table as an 8-part parquet DIRECTORY in scratch and
@@ -105,45 +124,16 @@ object StreamParityQ {
     */
   def streamUpsertParity(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-q231").toString
     val stream = graft.streaming.EventStreams
       .readEventStream(spark, stageMultiFile(spark, dir), maxFilesPerTrigger = 2)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
         col("value"))
       .as[graft.streaming.EventStreams.Event]
-    // recentProgress is capped at numRecentProgressUpdates entries
-    // (default 100) — past that the drain-stats row sum would silently
-    // undercount. Raise it for the drain's lifetime (4 batches today;
-    // the headroom covers any future finer staging). The restore lives
-    // in `finally` (ADVICE r17): a drain failure must not leave the
-    // session conf at 1000 for every subsequent query in the suite.
-    withRaisedProgressCap(spark) {
-      val drainT0 = System.nanoTime()
-      val drain = graft.streaming.EventStreams.upsertLatest(stream).toDF()
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-          // same idempotent-replay discipline as incrementalParquetSink: a
-          // replayed batchId overwrites its own partition, never appends twice
-          batch.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(s"$tmp/log")
-        }
-        .outputMode(OutputMode.Update())
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      require(drain.awaitTermination(600000),
-        "q231 streaming drain did not terminate within 10 minutes")
-      graft.streaming.DrainStats.record("q231_drain",
-        drain.recentProgress.map(_.numInputRows).sum,
-        (System.nanoTime() - drainT0) / 1e9,
-        drain.recentProgress.toSeq.map(_.batchDuration))
-    }
+    val log = drainToLog(spark, "q231",
+      graft.streaming.EventStreams.upsertLatest(stream).toDF())
     // ties across batches are byte-identical re-emissions of the same
     // winner (batch_id is dropped), so max_by's tie-pick cannot diverge
-    spark.read.parquet(s"$tmp/log")
+    spark.read.parquet(log)
       .groupBy(col("user_id"), col("event_type"))
       .agg(max_by(
         struct(col("event_id"), col("ts_us"), col("value")),
@@ -177,35 +167,13 @@ object StreamParityQ {
     * (hour, event_type) — bounded cardinality; one log scan + hash agg.
     */
   def streamHourlyParity(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-q232").toString
     val events = graft.streaming.EventStreams
       .readEventStream(spark, stageMultiFile(spark, dir), maxFilesPerTrigger = 2)
-    withRaisedProgressCap(spark) {
-      val drainT0 = System.nanoTime()
-      val drain = graft.streaming.EventStreams
-        .hourlyCounts(events, watermark = "3650 days")
-        .select(unix_micros(col("hour_start")).as("hour_start_us"),
-          col("event_type"), col("n_events"), col("total_value"))
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-          batch.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(s"$tmp/log")
-        }
-        .outputMode(OutputMode.Update())
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      require(drain.awaitTermination(600000),
-        "q232 streaming drain did not terminate within 10 minutes")
-      graft.streaming.DrainStats.record("q232_drain",
-        drain.recentProgress.map(_.numInputRows).sum,
-        (System.nanoTime() - drainT0) / 1e9,
-        drain.recentProgress.toSeq.map(_.batchDuration))
-    }
-    spark.read.parquet(s"$tmp/log")
+    val log = drainToLog(spark, "q232", graft.streaming.EventStreams
+      .hourlyCounts(events, watermark = "3650 days")
+      .select(unix_micros(col("hour_start")).as("hour_start_us"),
+        col("event_type"), col("n_events"), col("total_value")))
+    spark.read.parquet(log)
       .groupBy(col("hour_start_us"), col("event_type"))
       .agg(max_by(struct(col("n_events"), col("total_value")),
         col("batch_id")).as("w"))

@@ -236,6 +236,11 @@ object EventStreams {
     * same checkpoint ingests NOTHING twice (exactly-once per batch), the
     * property the reference implements by hand with
     * advance-bookmark-after-write.
+    *
+    * Runs in `OutputMode.Update()`, so stateful streams (`upsertLatest`,
+    * `hourlyCounts`) land each batch's updated rows as a batch_id-partitioned
+    * update log (the q231/q232 parity drains). On a stateless stream Update
+    * emits exactly what Append does: every input row, once.
     */
   def incrementalParquetSink(stream: DataFrame, outPath: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
@@ -251,6 +256,7 @@ object EventStreams {
           .partitionBy("batch_id")
           .parquet(outPath)
       }
+      .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpoint)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()

@@ -269,7 +269,7 @@ class PlanShapeSpec extends SparkTestBase {
     // A regression to a window ("latest per key via row_number") would
     // shuffle + sort every logged emission; a join against the live keys
     // would re-read the log. The drain itself is audited separately
-    // (tools/StreamAudit → PLANS_r9.md); this pins the reduction shape.
+    // (PLANS_r9.md); this pins the reduction shape.
     Seq("q231_stream_upsert_parity", "q232_stream_hourly_parity").foreach { q =>
       val p = plan(q)
       assert(!p.contains("Join") && !p.contains("Window"),

@@ -69,7 +69,7 @@ object SimJdbc {
   /** The one latch every `serial=1` connection contends — the Derby model. */
   private val globalLatch = new Object
 
-  /** Write-side observability for SimJdbcSpec / JdbcWire: inserted-row
+  /** Write-side observability for SimJdbcSpec: inserted-row
     * count, batch count, and an order-insensitive checksum of inserted IDs.
     */
   val insertedRows = new AtomicLong(0)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** The wire-simulator driver must serve Spark's REAL JDBC machinery — the
   * same [[Jdbc]] entry points q73 gates against Derby — with verifiable
-  * content, or its measurements (JdbcWire, BASELINE round 16) mean
+  * content, or its measurements (BASELINE round 16) mean
   * nothing. No latency here: correctness only (rowNanos=0).
   */
 class SimJdbcSpec extends SparkTestBase {
