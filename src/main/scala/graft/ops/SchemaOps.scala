@@ -2,15 +2,14 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{NullType, StringType}
+import org.apache.spark.sql.types.StringType
 
 /** Schema normalization/enforcement operators (SURVEY.md §1.3, §2.2 P1–P3).
   *
-  * Re-expresses the reference's `enforce_types` / `cast_nulltype_to_string` /
-  * `rearrange_columns_typed` (`go-quality-elt.py:206-225`) and the
-  * lowercase/trim column normalization (`go-transform-elt.py:185-201`) as
-  * single `select` projections — one codegen stage, no per-column loops over
-  * data.
+  * Re-expresses the reference's `enforce_types` / `rearrange_columns_typed`
+  * (`go-quality-elt.py:206-225`) and the lowercase/trim column normalization
+  * (`go-transform-elt.py:185-201`) as single `select` projections — one
+  * codegen stage, no per-column loops over data.
   */
 object SchemaOps {
 
@@ -37,13 +36,6 @@ object SchemaOps {
       else lit(null).cast(tpe).as(name)
     }: _*)
   }
-
-  /** NullType columns → string (`go-quality-elt.py:212-215`). */
-  def castNullTypeToString(df: DataFrame): DataFrame =
-    df.select(df.schema.fields.map { f =>
-      if (f.dataType == NullType) col(f.name).cast(StringType).as(f.name)
-      else col(f.name)
-    }.toIndexedSeq: _*)
 
   /** P8 — required-column assertion (`go-transform-elt.py:190-193`). */
   def assertColumns(df: DataFrame, required: Seq[String]): Unit = {

@@ -257,7 +257,6 @@ object PipelineRunner {
           write("quality_price", q.priceIssues, layer("quality/price"), (in * 0.1).toLong),
           write("quality_quantity", q.quantityIssues, layer("quality/quantity"),
             (in * 0.1).toLong))
-        q.metricsInput.unpersist() // the metric job reads the handoff instead
       }),
       Workflow.StageDef("metric_elt", Seq("quality_elt"))(() => {
         // the published final table projected to the consumed columns, with

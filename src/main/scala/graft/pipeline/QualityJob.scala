@@ -28,12 +28,12 @@ object QualityJob {
     *                      quarantine as partition-pruned READS of that
     *                      store instead of two recomputes of the chain
     *                      (the 100-TB layout; PipelineRunner ships it)
-    * @param finalDf      full canonical rows, severity != high — NOT cached;
-    *                      intended to stream straight to its sink
-    * @param quarantine   full canonical rows, severity == high — NOT cached
+    * @param finalDf      full canonical rows, severity != high
+    * @param quarantine   full canonical rows, severity == high
     * @param metricsInput the severity-filtered [[MetricsJob.consumedColumns]]
-    *                     projection, cached MEMORY_AND_DISK — the one plan
-    *                     the nine metric families fan out from
+    *                     projection — the one plan the metric families fan
+    *                     out from
+    * None of them is cached (P7).
     */
   final case class QualityOutput(canonical: DataFrame, finalDf: DataFrame,
       quarantine: DataFrame, priceIssues: DataFrame, quantityIssues: DataFrame,
@@ -86,16 +86,9 @@ object QualityJob {
     * @param thresholds (restaurant_id, item_category, item_name,
     *                   price_min, price_max, qty_min, qty_max)
     * @param dateDim    date_key (dd-MM-yyyy string) + calendar columns
-    * @param materialize hook applied to the full canonical frame BEFORE the
-    *                    severity split — the seam a caller uses to share the
-    *                    canonical rows (PipelineQ persists them) so
-    *                    finalDf/quarantine/metricsInput all read one built
-    *                    frame instead of re-running the join chain.
-    *                    Identity by default; must be semantics-preserving.
     */
   def apply(items: DataFrame, options: DataFrame, dateDim: DataFrame,
-      thresholds: DataFrame,
-      materialize: DataFrame => DataFrame = identity): QualityOutput = {
+      thresholds: DataFrame): QualityOutput = {
     // P2 — lower/trim every string column in one projection
     val normalized = SchemaOps.normalizeStringValues(items)
 
@@ -126,18 +119,16 @@ object QualityJob {
     // keep option/date columns appended after the canonical prefix
     val canonicalCols = Schemas.canonicalOrderItems.map(_._1)
     val extras = enriched.columns.filterNot(canonicalCols.contains)
-    val canonical = materialize(SchemaOps.rearrangeColumnsTyped(enriched,
-      Schemas.canonicalOrderItems ++ extras.map(c => c -> enriched.schema(c).dataType.sql)))
+    val canonical = SchemaOps.rearrangeColumnsTyped(enriched,
+      Schemas.canonicalOrderItems ++ extras.map(c => c -> enriched.schema(c).dataType.sql))
 
-    // P7 — severity split. The full 30-column canonical rows are NOT
-    // cached: finalDf/quarantine stream straight to their sinks, and the
-    // metric fan-out reads a cached CONSUMED-COLUMNS projection instead —
-    // caching the fat rows pinned ~3× the bytes the nine downstream
-    // aggregations actually touch (round-2 judge item 3).
+    // P7 — severity split. Every output is a lazy plan over `canonical`;
+    // the stage caches nothing. A caller that reads several outputs shares
+    // the canonical rows itself: PipelineRunner lands `canonical` once,
+    // partitioned by severity, and PipelineQ persists it.
     val metricsInput = canonical
       .filter(col("severity") =!= "high")
       .select(MetricsJob.consumedColumns.map(col): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     QualityOutput(
       canonical = canonical,
       finalDf = canonical.filter(col("severity") =!= "high"),

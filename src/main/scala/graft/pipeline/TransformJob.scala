@@ -71,12 +71,9 @@ object TransformJob {
   def removeSize(name: Column, rx: String = Schemas.sizeRegex): Column =
     trim(regexp_replace(regexp_replace(name, rx, ""), "\\s+", " "))
 
-  /** The pure (item_category, item_name) → label function: category/name
-    * cleaning, size extraction, beverage classification, final-category
-    * resolution + merges + keyword reassignment, and the P5 test-row flag.
-    * Every expensive regex in the transform lives here, and every output
-    * depends ONLY on the two input label columns — which is what makes the
-    * dictionary path of [[apply]] legal.
+  /** Category/name cleaning, size extraction, beverage classification,
+    * final-category resolution + merges + keyword reassignment, and the P5
+    * test-row flag: every expensive regex in the transform.
     */
   private def labelColumns(df: DataFrame, rules: MappingRuleSet): DataFrame = {
     // The cleaned+lowered label is materialized as a REAL column before the
@@ -122,9 +119,7 @@ object TransformJob {
           coalesce(col("item_name").rlike("(?i)test"), lit(false)))
   }
 
-  /** Row-date derivation + null fills — the only per-row work that does NOT
-    * factor through (item_category, item_name).
-    */
+  /** Row-date derivation + null fills. */
   private def rowColumns(df: DataFrame): DataFrame = df
     // datetime derivation (`go-transform-elt.py:318-326`): true date +
     // dd-MM-yyyy date_key + HH:mm:ss time
@@ -144,80 +139,27 @@ object TransformJob {
     * classification, final-category resolution + merges + keyword
     * reassignment, test-row removal, datetime derivation, null fills.
     *
-    * Two physical strategies, same semantics (spec-pinned equal):
-    *
-    *  - `dictionarize = true` (default): every label output is a pure
-    *    function of `(item_category, item_name)`, and that domain is a
-    *    MENU — thousands of distinct items against billions of order
-    *    lines. So the ~30-regex chain runs once per DISTINCT pair and the
-    *    results broadcast-join back to the facts (null-safe keys; the
-    *    distinct makes the join 1:1, no fan-out). At 100 TB this turns
-    *    ~10¹⁰ regex evaluations into ~10⁵ plus one broadcast hash join —
-    *    the same family of rewrite as the threshold-severity broadcast
-    *    join replacing the reference's dict UDF. The P5 test filter sits
-    *    above the join on the dict-derived flag; Catalyst pushing it to
-    *    the dictionary side is CORRECT here (every fact row has a dict
-    *    entry by construction) and optimal, so no optimizer fence needed.
-    *  - `dictionarize = false`: the per-row chain (one pass, all codegen,
-    *    native [[graft.functions.FirstMatchLabel]] rule loops). Use when
-    *    the name domain is genuinely high-cardinality (free text, not a
-    *    menu) — there the distinct+broadcast would exceed the broadcast
-    *    threshold and fall back to a shuffle join that costs more than
-    *    per-row evaluation.
+    * One per-row chain, as the reference applies U1–U4
+    * (`go-transform-elt.py:204-336`): a single map-only stage, all codegen,
+    * with the rule loops in the native [[graft.functions.FirstMatchLabel]]
+    * expression — no shuffle, no join, no cache.
     */
-  def apply(orderItems: DataFrame,
-      rules: MappingRuleSet = MappingRules.default,
-      dictionarize: Boolean = true): DataFrame = {
+  def apply(orderItems: DataFrame, rules: MappingRuleSet = MappingRules.default): DataFrame = {
     val named = graft.ops.SchemaOps.normalizeColumnNames(orderItems)
     graft.ops.SchemaOps.assertColumns(named, Seq("item_category", "item_name"))
-
-    if (dictionarize) {
-      val dict = labelColumns(
-        named.select(
-          col("item_category").as("__k_cat"), col("item_name").as("__k_name"),
-          col("item_category"), col("item_name")).distinct(), rules)
-      val facts = named
-        .withColumnRenamed("item_category", "__o_cat")
-        .withColumnRenamed("item_name", "__o_name")
-      // LEFT join + loud guard, not inner: "every fact row has a dict
-      // entry" holds by construction only when the two scans of the input
-      // agree — a nondeterministic label column or source files rewritten
-      // between the dict scan and the facts scan would break it, and an
-      // inner join would then DROP those fact rows indistinguishably from
-      // P5 test removal. The guard turns that into an error naming the
-      // cause. (__is_test is non-null for every dict row — built from
-      // coalesce(…, false) — so null here can only mean "no dict entry".)
-      val labeled = facts.join(broadcast(dict),
-        facts("__o_cat") <=> dict("__k_cat") &&
-          facts("__o_name") <=> dict("__k_name"), "left")
-        .withColumn("__is_test", when(col("__is_test").isNull,
-          raise_error(concat(lit("TransformJob dictionary miss for ("),
-            col("__o_cat"), lit(", "), col("__o_name"),
-            lit(") — nondeterministic label column or input changed between "
-              + "the dictionary and facts scans? Use dictionarize = false"))))
-          .otherwise(col("__is_test")))
-        .filter(!col("__is_test"))
-        .drop("__o_cat", "__o_name", "__k_cat", "__k_name", "__is_test")
-      // restore the row-wise column order (original positions for the two
-      // replaced labels, derived labels appended) so both paths emit the
-      // same schema
-      rowColumns(labeled.select(named.columns.map(col).toSeq ++ Seq(
-        col("item_size"), col("beverage_class"), col("final_category")): _*))
-    } else {
-      rowColumns(labelColumns(named, rules)
-        // `__fence` is an OPTIMIZER FENCE: P5 must test POST-transform
-        // labels, but Catalyst pushes a filter below every projection,
-        // substituting the full rule-chain expressions into the predicate
-        // (~200 regex nodes re-evaluated per pre-filter row; measured 4×
-        // end-to-end slowdown at sf0.1). PushDownPredicates only refuses
-        // when the PROJECT carries a nondeterministic field (it pushes
-        // nondeterministic and split-AND conditions just fine), so the
-        // fence is a nondeterministic column in the projection below the
-        // filter, kept alive by the always-false `__fence < 0` disjunct
-        // (an OR is not conjunct-split).
-        .withColumn("__fence", monotonically_increasing_id())
-        .filter(!col("__is_test") || col("__fence") < 0)
-        .drop("__fence", "__is_test"))
-    }
+    rowColumns(labelColumns(named, rules)
+      // `__fence` is an OPTIMIZER FENCE: P5 must test POST-transform
+      // labels, but Catalyst pushes a filter below every projection,
+      // substituting the full rule-chain expressions into the predicate
+      // (~200 regex nodes re-evaluated per pre-filter row; measured 4×
+      // end-to-end slowdown at sf0.1). PushDownPredicates only refuses
+      // when the PROJECT carries a nondeterministic field (it pushes
+      // nondeterministic and split-AND conditions just fine), so the
+      // fence is a nondeterministic column in the projection below the
+      // filter, kept alive by the always-false `__fence < 0` disjunct
+      // (an OR is not conjunct-split).
+      .withColumn("__fence", monotonically_increasing_id())
+      .filter(!col("__is_test") || col("__fence") < 0)
+      .drop("__fence", "__is_test"))
   }
 }

@@ -213,29 +213,17 @@ object PipelineQ {
   // --------------------------------------------------------- shared plan ---
 
   /** One pipeline instantiation per (session, sfDir) via [[graft.core.Memo]]
-    * (the repo's single memo mechanism): the transform output is persisted
-    * and the quality output's internal cache (QualityJob P7) is shared by
-    * every downstream metric query. The full canonical quality frame
-    * (threshold agg + two joins + schema canon) is persisted too, so q64
-    * and q65 read one built frame instead of each re-running the join
-    * chain.
+    * (the repo's single memo mechanism): the transform output and the full
+    * canonical quality frame (threshold agg + two joins + schema canon) are
+    * persisted, so q64/q65 and every metric query read built frames instead
+    * of each re-running the regex transform and the join chain.
     */
   private def pipeline(spark: SparkSession, dir: String): (DataFrame, QualityJob.QualityOutput) =
     graft.core.Memo.cached(spark, s"pipeline:$dir") {
-      // dictionarize = false: the per-row native-expression chain. The
-      // dictionary strategy was A/B-measured here (sf0.1, interleaved in
-      // one JVM, re-run under the round-10 pre-touched-heap config —
-      // PLANS_r10 §3/§5): without a feed persist the dict branch re-runs
-      // the synthesized feed join as a second subtree (~8-9 s, column
-      // pruning defeats exchange reuse); WITH the persist it ties the
-      // row-wise floor (~2.9 vs ~2.4 s). Equal cost, so the simpler
-      // no-cache-coupling row-wise chain stays; the dictionary path
-      // remains the right call when the input is a CHEAP re-scannable
-      // table (see TransformJob's scaladoc — PipelineRunner's landing parquet).
-      val t = TransformJob(feed(spark, dir), rules, dictionarize = false)
+      val t = TransformJob(feed(spark, dir), rules)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val q = QualityJob(t, options(spark, dir), dateDim(spark, dir), thresholdsOf(t),
-        materialize = _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val q = QualityJob(t, options(spark, dir), dateDim(spark, dir), thresholdsOf(t))
+      q.canonical.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       (t, q)
     }
 

@@ -65,50 +65,60 @@ object EventStreams {
     */
   def sessionize(events: Dataset[Event], gapSeconds: Long): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
-    val gapUs = gapSeconds * 1000000
     events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[SessionState, SessionOut](
         OutputMode.Update(), GroupStateTimeout.NoTimeout) {
         case (userId, rows, state: GroupState[SessionState]) =>
-          val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          val orphans = Seq.newBuilder[SessionOut]
-          val s = sorted.foldLeft(state.getOption) {
-            case (None, e) =>
-              Some(SessionState(micros(e.ts), micros(e.ts), 1, e.value))
-            case (Some(st), e) =>
-              val us = micros(e.ts)
-              if (us - st.last_us > gapUs) {
-                // gap exceeded → emit the superseded session before replacing
-                // it (a session that opens AND closes inside one batch would
-                // otherwise never reach the sink; the batch twin emits it)
-                orphans += SessionOut(userId, st.start_us, st.last_us,
-                  st.n_events, st.total_value)
-                Some(SessionState(us, us, 1, e.value))
-              } else if (st.start_us - us > gapUs) {
-                // a late event more than `gap` OLDER than the session start
-                // belongs to an earlier, already-gone session — merging it
-                // would diverge from the batch twin (q26 sorts globally and
-                // splits on the gap). Emit it as a standalone session; late
-                // orphans are not merged with EACH OTHER (that would need
-                // buffering every late event until the watermark — a
-                // documented approximation).
-                orphans += SessionOut(userId, us, us, 1, e.value)
-                Some(st)
-              } else
-                // min/max guards: a within-watermark LATE event arriving in a
-                // later micro-batch (us < st.last_us) must extend, never
-                // regress, the session bounds — otherwise a subsequent
-                // on-time event could see a spurious gap vs the regressed
-                // last_us and split one real session in two
-                Some(st.copy(start_us = math.min(st.start_us, us),
-                  last_us = math.max(st.last_us, us), n_events = st.n_events + 1,
-                  total_value = st.total_value + e.value))
-          }.get
+          val (closed, s) = foldSessions(userId, rows, state.getOption, gapSeconds)
           state.update(s)
-          (orphans.result() :+
-            SessionOut(userId, s.start_us, s.last_us, s.n_events, s.total_value)).iterator
+          (closed :+ sessionOut(userId, s)).iterator
       }
+  }
+
+  private def sessionOut(userId: Long, s: SessionState): SessionOut =
+    SessionOut(userId, s.start_us, s.last_us, s.n_events, s.total_value)
+
+  /** The session fold both sessionizers share: folds one micro-batch of a
+    * user's events, in (ts, event_id) order, into their open session.
+    * Returns the sessions the batch closed — gap splits and orphan late
+    * events — and the open session after the batch.
+    */
+  private def foldSessions(userId: Long, rows: Iterator[Event], open: Option[SessionState],
+      gapSeconds: Long): (Seq[SessionOut], SessionState) = {
+    val gapUs = gapSeconds * 1000000
+    val closed = Seq.newBuilder[SessionOut]
+    val s = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foldLeft(open) {
+      case (None, e) =>
+        Some(SessionState(micros(e.ts), micros(e.ts), 1, e.value))
+      case (Some(st), e) =>
+        val us = micros(e.ts)
+        if (us - st.last_us > gapUs) {
+          // gap exceeded → emit the superseded session before replacing it
+          // (a session that opens AND closes inside one batch would
+          // otherwise never reach the sink; the batch twin emits it)
+          closed += sessionOut(userId, st)
+          Some(SessionState(us, us, 1, e.value))
+        } else if (st.start_us - us > gapUs) {
+          // a late event more than `gap` OLDER than the session start
+          // belongs to an earlier, already-gone session — merging it would
+          // diverge from the batch twin (q26 sorts globally and splits on
+          // the gap). Emit it as a standalone session; late orphans are not
+          // merged with EACH OTHER (that would need buffering every late
+          // event until the watermark — a documented approximation).
+          closed += SessionOut(userId, us, us, 1, e.value)
+          Some(st)
+        } else
+          // min/max guards: a within-watermark LATE event arriving in a
+          // later micro-batch (us < st.last_us) must extend, never regress,
+          // the session bounds — otherwise a subsequent on-time event could
+          // see a spurious gap vs the regressed last_us and split one real
+          // session in two
+          Some(st.copy(start_us = math.min(st.start_us, us),
+            last_us = math.max(st.last_us, us), n_events = st.n_events + 1,
+            total_value = st.total_value + e.value))
+    }.get
+    (closed.result(), s)
   }
 
   /** Stream-stream interval join: clicks joined to purchases by the same
@@ -154,35 +164,12 @@ object EventStreams {
           if (state.hasTimedOut) {
             val s = state.get
             state.remove()
-            Iterator.single(SessionOut(userId, s.start_us, s.last_us, s.n_events, s.total_value))
+            Iterator.single(sessionOut(userId, s))
           } else {
-            val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-            val closed = Seq.newBuilder[SessionOut]
-            val gapUs = gapSeconds * 1000000
-            val s = sorted.foldLeft(state.getOption) {
-              case (None, e) =>
-                Some(SessionState(micros(e.ts), micros(e.ts), 1, e.value))
-              case (Some(st), e) =>
-                val us = micros(e.ts)
-                if (us - st.last_us > gapUs) {
-                  closed += SessionOut(userId, st.start_us, st.last_us, st.n_events, st.total_value)
-                  Some(SessionState(us, us, 1, e.value))
-                } else if (st.start_us - us > gapUs) {
-                  // orphan late event from an earlier session — emit closed
-                  // immediately rather than corrupting the current session
-                  // (see the same branch in [[sessionize]])
-                  closed += SessionOut(userId, us, us, 1, e.value)
-                  Some(st)
-                } else
-                  // same late-event guard as [[sessionize]]: never regress
-                  // the stored session bounds
-                  Some(st.copy(start_us = math.min(st.start_us, us),
-                    last_us = math.max(st.last_us, us), n_events = st.n_events + 1,
-                    total_value = st.total_value + e.value))
-            }.get
+            val (closed, s) = foldSessions(userId, rows, state.getOption, gapSeconds)
             state.update(s)
             state.setTimeoutTimestamp(s.last_us / 1000 + gapSeconds * 1000)
-            closed.result().iterator
+            closed.iterator
           }
       }
   }
@@ -264,8 +251,8 @@ object EventStreams {
   /** File-stream ingestion of the events table with `Trigger.AvailableNow`
     * parity: returns the streaming DataFrame; callers attach
     * `.writeStream.trigger(Trigger.AvailableNow()).option("checkpointLocation", ...)`.
-    */
-  /** `maxFilesPerTrigger > 0` caps each micro-batch at that many input
+    *
+    * `maxFilesPerTrigger > 0` caps each micro-batch at that many input
     * files — the file-stream source batches whole files, so this is the
     * lever that turns a multi-file events directory into a genuine
     * multi-batch drain (checkpointed incremental state, per-batch
@@ -284,12 +271,15 @@ object EventStreams {
     // Path handling: events.parquet is a single FILE in driver testdata but
     // a DIRECTORY of part files in ScaleUp output; the file-stream source
     // requires a directory basePath, so the single-file layout streams from
-    // the parent dir with a name filter.
+    // the parent dir with a name filter. The path's Hadoop FileSystem tells
+    // which (a java.io.File check reads a `file:` URI as "not a directory").
+    val p = new org.apache.hadoop.fs.Path(path)
+    val isDir = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p).isDirectory
     val reader0 = spark.readStream.schema(schema)
     val reader = if (maxFilesPerTrigger > 0)
       reader0.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader0
     val raw =
-      if (new java.io.File(path).isDirectory) reader.parquet(path)
+      if (isDir) reader.parquet(path)
       else reader.option("pathGlobFilter", "events.parquet").parquet(dir)
     graft.core.Tables.canonicalizeEventsTs(raw)
   }

@@ -27,21 +27,11 @@ class BenchScratchSpec extends AnyFunSuite {
   }
 
   test("dirBytes sums leaf files recursively") {
-    val d = java.nio.file.Files.createTempDirectory("graft-scratch-spec").toFile
-    try {
-      val sub = new java.io.File(d, "sub"); sub.mkdirs()
-      java.nio.file.Files.write(new java.io.File(d, "a.bin").toPath,
-        new Array[Byte](1000))
-      java.nio.file.Files.write(new java.io.File(sub, "b.bin").toPath,
-        new Array[Byte](500))
-      assert(Bench.dirBytes(d) == 1500L)
-      assert(Bench.dirBytes(new java.io.File(d, "missing")) == 0L)
-    } finally {
-      def wipe(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(wipe)
-        f.delete(); ()
-      }
-      wipe(d)
-    }
+    val d = new java.io.File(graft.core.Scratch.dir("graft-scratch-spec"))
+    val sub = new java.io.File(d, "sub"); sub.mkdirs()
+    java.nio.file.Files.write(new java.io.File(d, "a.bin").toPath, new Array[Byte](1000))
+    java.nio.file.Files.write(new java.io.File(sub, "b.bin").toPath, new Array[Byte](500))
+    assert(Bench.dirBytes(d) == 1500L)
+    assert(Bench.dirBytes(new java.io.File(d, "missing")) == 0L)
   }
 }

@@ -9,7 +9,7 @@ class IngestAndSchemaSpec extends SparkTestBase {
   import spark.implicits._
 
   test("incremental ingest: watermark filter, dedupe, bookmark advance order") {
-    val dir = Files.createTempDirectory("graft-ingest").toString
+    val dir = graft.core.Scratch.dir("graft-ingest")
     val store = new FsBookmarkStore(s"$dir/bookmarks")
     val out = s"$dir/landing"
 
@@ -41,7 +41,7 @@ class IngestAndSchemaSpec extends SparkTestBase {
   }
 
   test("partition-level upsert rewrites only touched partitions, keeps latest rows") {
-    val dir = Files.createTempDirectory("graft-upsert").toString
+    val dir = graft.core.Scratch.dir("graft-upsert")
     val path = s"$dir/table"
     val day1 = Seq((1L, "2024-01-01", 100L, "v1"), (2L, "2024-01-01", 100L, "v1"),
       (3L, "2024-01-02", 100L, "v1"))

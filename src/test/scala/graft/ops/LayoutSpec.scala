@@ -10,7 +10,7 @@ class LayoutSpec extends SparkTestBase {
   import spark.implicits._
 
   private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-layout-$tag").toString + "/t"
+    graft.core.Scratch.dir(s"graft-layout-$tag") + "/t"
 
   // deterministic two-dimensional data with no correlation between dims
   private lazy val data = spark.range(0, 100000).select(

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 class SourcesSpec extends SparkTestBase {
   import spark.implicits._
 
-  private lazy val tmp = Files.createTempDirectory("graft-sources").toString
+  private lazy val tmp = graft.core.Scratch.dir("graft-sources")
 
   test("parquet round-trip preserves schema and values") {
     val df = spark.read.parquet(s"$sf/orders.parquet")

@@ -21,7 +21,7 @@ class PipelineChainSpec extends SparkTestBase {
     (r.getLong(0), Option(r.getDecimal(1)).map(BigDecimal(_)).getOrElse(BigDecimal(0)))
   }
 
-  private lazy val dir = Files.createTempDirectory("graft-chain").toString
+  private lazy val dir = graft.core.Scratch.dir("graft-chain")
 
   private def csvOut(df: DataFrame, name: String): String = {
     val p = s"$dir/landing_csv/$name"
@@ -62,7 +62,7 @@ class PipelineChainSpec extends SparkTestBase {
       "quality/price" -> q.priceIssues, "quality/quantity" -> q.quantityIssues) ++
       metrics.map { case (s, df) => s"metrics/$s" -> df }
     val want = ref.map { case (layer, df) => layer -> digest(df) }
-    Seq(items, transformed, canonical, base, q.metricsInput).foreach(_.unpersist())
+    Seq(items, transformed, canonical, base).foreach(_.unpersist())
 
     val out = s"$dir/out"
     val r = PipelineRunner.run(spark, itemsCsv, optionsCsv, dateDimCsv,
@@ -107,7 +107,7 @@ class PipelineChainSpec extends SparkTestBase {
   }
 
   test("a file: URI out root puts the manifest and the ledger beside its layers") {
-    val local = Files.createTempDirectory("graft-chain-uri")
+    val local = java.nio.file.Paths.get(graft.core.Scratch.dir("graft-chain-uri"))
     val out = local.toUri.toString.stripSuffix("/")
     assert(out.startsWith("file:"))
     intercept[IllegalStateException] {
@@ -125,7 +125,7 @@ class PipelineChainSpec extends SparkTestBase {
 
   test("write sizing reads bytes through the path's FileSystem: file: URI = plain path") {
     // a sparse 100 MB file: three 32 MB steps above the 1-task floor, no disk used
-    val sized = Files.createTempDirectory("graft-sizing")
+    val sized = java.nio.file.Paths.get(graft.core.Scratch.dir("graft-sizing"))
     val f = new java.io.RandomAccessFile(sized.resolve("part-00000.csv").toFile, "rw")
     try f.setLength(100L << 20) finally f.close()
     val plain = PipelineRunner.inputBytes(spark, sized.toString)

@@ -30,7 +30,7 @@ class PipelineGoldenSpec extends SparkTestBase {
     p.toString
   }
 
-  private lazy val fixtureDir = Files.createTempDirectory("graft-golden").toString
+  private lazy val fixtureDir = graft.core.Scratch.dir("graft-golden")
 
   // columns: app,rid,created,order,user,card,loyalty,currency,li,category,name,price,qty
   private lazy val itemsCsv = writeCsv(fixtureDir, "order_items.csv",
@@ -98,23 +98,6 @@ class PipelineGoldenSpec extends SparkTestBase {
     assert(byLi("li1").getAs[String]("time") == "11:03:32")
   }
 
-  test("transform: dictionary path equals the row-wise path row-for-row") {
-    // The default strategy runs the regex chain once per DISTINCT
-    // (item_category, item_name) and broadcast-joins back; dictionarize =
-    // false is the per-row chain. Same fixture through both must produce
-    // identical rows (schema AND values) — including the null-label rows,
-    // which exercise the null-safe join keys.
-    val raw = CsvSource.read(spark, itemsCsv)
-    val dict = TransformJob(raw, MappingRules.default, dictionarize = true)
-    val rowwise = TransformJob(raw, MappingRules.default, dictionarize = false)
-    assert(dict.columns.toSeq == rowwise.columns.toSeq,
-      s"schemas differ: ${dict.columns.toSeq} vs ${rowwise.columns.toSeq}")
-    val key = dict.columns.indexOf("lineitem_id")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getString(key) -> r.toSeq).sortBy(_._1).toSeq
-    assert(rows(dict) == rows(rowwise))
-  }
-
   test("ingest: each landing table's declared columns are typed, the rest stay strings") {
     def types(t: String) = spark.read.parquet(s"${result._2}/landing/$t").schema
       .fields.map(f => f.name -> f.dataType.simpleString).toMap
@@ -151,6 +134,23 @@ class PipelineGoldenSpec extends SparkTestBase {
     assert(byLi("li1").getAs[String]("order_key").length == 64, "sha2 surrogate")
   }
 
+  test("quality: building the output and writing canonical caches nothing") {
+    // The session's cache manager is shared with every other suite, so the
+    // check is on what QualityJob's outputs read: a frame persisted anywhere
+    // in the stage shows up as an InMemoryRelation in some output's plan.
+    val out = result._2
+    val q = QualityJob(spark.read.parquet(s"$out/transform/order_items"),
+      spark.read.parquet(s"$out/landing/order_item_options"),
+      spark.read.parquet(s"$out/landing/date_dim"), thresholds)
+    q.canonical.write.mode("overwrite").parquet(s"$fixtureDir/canonical_uncached")
+    val outputs = Seq(q.canonical, q.finalDf, q.quarantine, q.priceIssues, q.quantityIssues,
+      q.metricsInput)
+    val cached = outputs.flatMap(_.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r })
+    assert(cached.isEmpty,
+      s"QualityJob must leave caching to its caller:\n${cached.mkString("\n")}")
+  }
+
   test("metrics: revenue formula, ranking, discount flag, manifest") {
     val out = result._2
     // li1: option 2.0*1 + item 12.5*3 = 39.5
@@ -174,7 +174,7 @@ class PipelineGoldenSpec extends SparkTestBase {
 
   test("S10 archival + empty-overwrite: landing CSVs move, re-runs can't leave stale data") {
     // own copies so the shared `result` fixtures stay untouched
-    val dir = Files.createTempDirectory("graft-archival").toString
+    val dir = graft.core.Scratch.dir("graft-archival")
     def copy(src: String): String = {
       val dst = Paths.get(dir, Paths.get(src).getFileName.toString)
       Files.copy(Paths.get(src), dst)
@@ -211,7 +211,7 @@ class PipelineGoldenSpec extends SparkTestBase {
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.norename.impl", classOf[NoRenameFs].getName)
     conf.setBoolean("fs.norename.impl.disable.cache", true)
-    val dir = Files.createTempDirectory("graft-cvd").toString
+    val dir = graft.core.Scratch.dir("graft-cvd")
     Files.createDirectories(Paths.get(s"$dir/landing"))
     Files.write(Paths.get(s"$dir/landing/a.csv"), "x,y\n1,2\n".getBytes)
     Files.write(Paths.get(s"$dir/landing/b.csv"), "x,y\n3,4\n".getBytes)

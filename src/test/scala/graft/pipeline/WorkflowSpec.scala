@@ -58,7 +58,7 @@ class WorkflowSpec extends AnyFunSuite {
   }
 
   test("ledger JSON records states and attempts") {
-    val p = java.nio.file.Files.createTempDirectory("graft-wf").toString + "/ledger.json"
+    val p = graft.core.Scratch.dir("graft-wf") + "/ledger.json"
     Workflow.run(Seq(
       StageDef("ok")(() => ()),
       StageDef("bad", Seq("ok"))(() => sys.error("x\"y")),
@@ -70,7 +70,7 @@ class WorkflowSpec extends AnyFunSuite {
   }
 
   test("the ledger records each stage's wall ms") {
-    val p = java.nio.file.Files.createTempDirectory("graft-wf").toString + "/ledger.json"
+    val p = graft.core.Scratch.dir("graft-wf") + "/ledger.json"
     val ledger = Workflow.run(Seq(
       StageDef("slow")(() => Thread.sleep(50)),
       StageDef("bad", Seq("slow"))(() => sys.error("x")),
@@ -85,7 +85,7 @@ class WorkflowSpec extends AnyFunSuite {
   }
 
   test("a file: URI ledger path lands at that path") {
-    val d = java.nio.file.Files.createTempDirectory("graft-wf")
+    val d = java.nio.file.Paths.get(graft.core.Scratch.dir("graft-wf"))
     Workflow.run(Seq(StageDef("ok")(() => ())),
       ledgerPath = Some(d.toUri.toString + "sub/ledger.json"))
     val json = java.nio.file.Files.readString(d.resolve("sub/ledger.json"))

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class JdbcSpec extends SparkTestBase {
   import spark.implicits._
 
-  private lazy val tmp = java.nio.file.Files.createTempDirectory("graft-derby-spec").toString
+  private lazy val tmp = graft.core.Scratch.dir("graft-derby-spec")
   private lazy val conn = {
     System.setProperty("derby.stream.error.file", s"$tmp/derby.log")
     Jdbc.Conn(s"jdbc:derby:$tmp/db;create=true")

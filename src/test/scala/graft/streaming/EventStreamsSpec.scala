@@ -56,64 +56,69 @@ class EventStreamsSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  test("late within-watermark event extends, never regresses, session bounds") {
-    // Regression for the round-1 advice: an unconditional last_us = us let a
-    // LATE event (older than the stored last_us) regress the session end;
-    // the next on-time event then saw a spurious gap and split the session.
+  /** Drains `batches` (one micro-batch each) through one of the two
+    * sessionizers, which share one session fold, and returns every session
+    * it emitted for `user`. `sessionizeClosed` emits a session only once the
+    * watermark passes its timeout, so its drain ends with two far-later
+    * events of another user; its 2-hour watermark delay keeps the late
+    * events of these cases inside the watermark.
+    */
+  private def drainSessions(closed: Boolean, gapSeconds: Long, user: Long,
+      batches: Seq[EventStreams.Event]*): Seq[EventStreams.SessionOut] = {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[EventStreams.Event]
-    // gap 1500 s: with the bug, the 10:30 event measures 10:30-10:00 =
-    // 1800 s > gap and wrongly starts a new session; correct last_us 10:10
-    // gives 1200 s < gap and continues the session.
-    val q = EventStreams.sessionize(input.toDS(), gapSeconds = 1500)
-      .writeStream.format("memory").queryName("late_session_test")
-      .outputMode(OutputMode.Update()).start()
+    val name = s"sessions_${user}_${if (closed) "closed" else "open"}"
+    val (sessions, mode) =
+      if (closed) (EventStreams.sessionizeClosed(input.toDS(), gapSeconds, "2 hours"),
+        OutputMode.Append())
+      else (EventStreams.sessionize(input.toDS(), gapSeconds), OutputMode.Update())
+    val flush = if (!closed) Nil else Seq("2024-01-03 00:00:00", "2024-01-03 00:05:00")
+      .map(t => Seq(EventStreams.Event(0, Timestamp.valueOf(t), -1, "view", 0.0)))
+    val q = sessions.writeStream.format("memory").queryName(name).outputMode(mode).start()
     try {
-      input.addData(
-        EventStreams.Event(1, Timestamp.valueOf("2024-01-01 10:10:00"), 9, "click", 1.0))
-      q.processAllAvailable()
-      input.addData( // late but within gap of the stored state
-        EventStreams.Event(2, Timestamp.valueOf("2024-01-01 10:00:00"), 9, "click", 2.0))
-      q.processAllAvailable()
-      input.addData( // on-time: must continue the SAME session
-        EventStreams.Event(3, Timestamp.valueOf("2024-01-01 10:30:00"), 9, "click", 4.0))
-      q.processAllAvailable()
-      val s = spark.table("late_session_test").as[EventStreams.SessionOut].collect()
-        .maxBy(_.n_events)
+      (batches ++ flush).foreach { b => input.addData(b); q.processAllAvailable() }
+      spark.table(name).as[EventStreams.SessionOut].collect().filter(_.user_id == user).toSeq
+    } finally q.stop()
+  }
+
+  for ((suffix, closed) <- Seq("" -> false, " (closed sessions)" -> true)) {
+    test("late within-watermark event extends, never regresses, session bounds" + suffix) {
+      // Regression for the round-1 advice: an unconditional last_us = us let
+      // a LATE event (older than the stored last_us) regress the session end;
+      // the next on-time event then saw a spurious gap and split the session.
+      // gap 1500 s: with the bug, the 10:30 event measures 10:30-10:00 =
+      // 1800 s > gap and wrongly starts a new session; correct last_us 10:10
+      // gives 1200 s < gap and continues the session.
+      val rows = drainSessions(closed, gapSeconds = 1500, user = 9,
+        Seq(EventStreams.Event(1, Timestamp.valueOf("2024-01-01 10:10:00"), 9, "click", 1.0)),
+        // late but within gap of the stored state
+        Seq(EventStreams.Event(2, Timestamp.valueOf("2024-01-01 10:00:00"), 9, "click", 2.0)),
+        // on-time: must continue the SAME session
+        Seq(EventStreams.Event(3, Timestamp.valueOf("2024-01-01 10:30:00"), 9, "click", 4.0)))
+      val s = rows.maxBy(_.n_events)
       assert(s.n_events == 3, s"session split by late event: $s")
       assert(s.total_value == 7.0)
       assert(s.start_us == Timestamp.valueOf("2024-01-01 10:00:00").getTime * 1000)
       assert(s.end_us == Timestamp.valueOf("2024-01-01 10:30:00").getTime * 1000)
-    } finally q.stop()
-  }
+    }
 
-  test("orphan late event (older than start minus gap) is its own session") {
-    // Review finding: merging a late event from BEFORE the current session's
-    // reach corrupts start/count/value vs the batch twin, which sorts
-    // globally and splits on the gap. It must surface as a standalone
-    // session and leave the current session untouched.
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[EventStreams.Event]
-    val q = EventStreams.sessionize(input.toDS(), gapSeconds = 1500)
-      .writeStream.format("memory").queryName("orphan_session_test")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      input.addData(
-        EventStreams.Event(1, Timestamp.valueOf("2024-01-01 10:10:00"), 11, "click", 1.0))
-      q.processAllAvailable()
-      input.addData( // 70 min older than the session start; gap is 25 min
-        EventStreams.Event(2, Timestamp.valueOf("2024-01-01 09:00:00"), 11, "click", 2.0))
-      q.processAllAvailable()
-      input.addData( // continues the CURRENT session, not the orphan
-        EventStreams.Event(3, Timestamp.valueOf("2024-01-01 10:20:00"), 11, "click", 4.0))
-      q.processAllAvailable()
-      val rows = spark.table("orphan_session_test").as[EventStreams.SessionOut].collect()
+    test("orphan late event (older than start minus gap) is its own session" + suffix) {
+      // Review finding: merging a late event from BEFORE the current
+      // session's reach corrupts start/count/value vs the batch twin, which
+      // sorts globally and splits on the gap. It must surface as a
+      // standalone session and leave the current session untouched.
+      val rows = drainSessions(closed, gapSeconds = 1500, user = 11,
+        Seq(EventStreams.Event(1, Timestamp.valueOf("2024-01-01 10:10:00"), 11, "click", 1.0)),
+        // 70 min older than the session start; gap is 25 min
+        Seq(EventStreams.Event(2, Timestamp.valueOf("2024-01-01 09:00:00"), 11, "click", 2.0)),
+        // continues the CURRENT session, not the orphan
+        Seq(EventStreams.Event(3, Timestamp.valueOf("2024-01-01 10:20:00"), 11, "click", 4.0)))
       val orphan = rows.filter(_.start_us == Timestamp.valueOf("2024-01-01 09:00:00").getTime * 1000)
       assert(orphan.nonEmpty && orphan.forall(s => s.n_events == 1 && s.total_value == 2.0))
       val current = rows.maxBy(r => (r.start_us, r.n_events))
       assert(current.start_us == Timestamp.valueOf("2024-01-01 10:10:00").getTime * 1000)
       assert(current.n_events == 2 && current.total_value == 5.0)
-    } finally q.stop()
+    }
   }
 
   test("stream-stream interval join pairs clicks with in-window purchases") {
@@ -190,7 +195,7 @@ class EventStreamsSpec extends SparkTestBase {
   }
 
   test("checkpointed foreachBatch sink is exactly-once across re-runs") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = graft.core.Scratch.dir("graft-ckpt")
     val out = s"$dir/landing"
     val ckpt = s"$dir/ckpt"
     def runOnce(): Unit = {
@@ -210,7 +215,7 @@ class EventStreamsSpec extends SparkTestBase {
   test("file-stream parity read: AvailableNow over the events table") {
     import org.apache.spark.sql.streaming.Trigger
     val stream = EventStreams.readEventStream(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
+    val dir = graft.core.Scratch.dir("graft-stream")
     val q = EventStreams.hourlyCounts(stream)
       .writeStream.format("memory").queryName("file_stream_test")
       .outputMode(OutputMode.Append())
@@ -224,6 +229,24 @@ class EventStreamsSpec extends SparkTestBase {
     val batch = graft.queries.EventsQ.hourlyWindow(spark, sf).count()
     assert(streamed > 0, "streaming read produced no closed windows")
     assert(streamed <= batch)
+  }
+
+  test("file-stream read drains a multi-file file: events directory") {
+    import org.apache.spark.sql.streaming.Trigger
+    val dir = graft.core.Scratch.dir("graft-events-dir")
+    val events = graft.core.Tables.readMaybeLegacyNanos(spark, s"$sf/events.parquet")
+    events.repartition(3).write.parquet(s"$dir/events.parquet")
+    val root = new java.io.File(dir).toURI.toString.stripSuffix("/")
+    assert(root.startsWith("file:"))
+    val q = EventStreams.readEventStream(spark, root, maxFilesPerTrigger = 1)
+      .writeStream.format("memory").queryName("events_dir_test")
+      .option("checkpointLocation", s"$dir/ckpt")
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination(120000)
+    val got = spark.table("events_dir_test").select("event_id").as[Long].collect().sorted
+    assert(got.length == events.count() && got.sameElements(
+      events.select("event_id").as[Long].collect().sorted), "every row, once")
   }
 
   test("upsertLatest: late and replayed events never regress per-key state") {
@@ -265,7 +288,7 @@ class EventStreamsSpec extends SparkTestBase {
       .as[EventStreams.Event]
     val state = new java.util.concurrent.ConcurrentHashMap[(Long, String),
       EventStreams.LatestOut]()
-    val dir = java.nio.file.Files.createTempDirectory("graft-upsert").toString
+    val dir = graft.core.Scratch.dir("graft-upsert")
     val q = EventStreams.upsertLatest(stream).toDF()
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
