@@ -243,10 +243,12 @@ class EventStreamsSpec extends SparkTestBase {
       .option("checkpointLocation", s"$dir/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination(120000)
-    val got = spark.table("events_dir_test").select("event_id").as[Long].collect().sorted
-    assert(got.length == events.count() && got.sameElements(
-      events.select("event_id").as[Long].collect().sorted), "every row, once")
+    try {
+      assert(q.awaitTermination(120000), "drain did not finish")
+      val got = spark.table("events_dir_test").select("event_id").as[Long].collect().sorted
+      assert(got.length == events.count() && got.sameElements(
+        events.select("event_id").as[Long].collect().sorted), "every row, once")
+    } finally q.stop()
   }
 
   test("upsertLatest: late and replayed events never regress per-key state") {
