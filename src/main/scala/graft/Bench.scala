@@ -263,6 +263,11 @@ object Bench {
     // spot-checks at generated sf1); unset = the full driver-contract run
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    // (classes compiled, compile ns) since JVM start
+    def codegen() = (org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount, org.apache.spark.sql.catalyst
+      .expressions.codegen.CodeGenerator.compileTime)
+    val cg0 = codegen()
     // Family-at-a-time with a Memo release at each boundary: memoized
     // artifacts are shared only WITHIN a family (file), so releasing
     // between families never forces a rebuild but caps the pinned
@@ -276,6 +281,7 @@ object Bench {
       graft.core.Memo.release(spark)
       rs
     }
+    val cg1 = codegen()
     calibrate("end")
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -312,13 +318,17 @@ object Bench {
           d.pctMs(50), d.pctMs(99))
       }.mkString("\"stream\":{", ",", "},")
     }
+    // Generated classes compiled over the measured queries, and the ms
+    // spent compiling them (process-wide: driver and task threads).
+    val extra = streamExtra +
+      BenchJson.codegenRecord(cg1._1 - cg0._1, (cg1._2 - cg0._2) / 1e6)
     // On full runs the complete map goes out as "total_full" so exactly ONE
     // line carries "metric":"total" (the tail-sized compact line below) — a
     // harness parsing every "total" line must never see two records with
     // DIFFERENT queries payloads for one pass. Spot runs print no compact
     // line, so they keep the plain "total" metric.
     val fullMetric = if (only.isEmpty) "total_full" else "total"
-    val line = s"""{"metric":"$fullMetric","value":$total,"failed":$failed,"unit":"sec","queries":$qs,"host":$hostJson,$streamExtra"sf":"$sfDir"}"""
+    val line = s"""{"metric":"$fullMetric","value":$total,"failed":$failed,"unit":"sec","queries":$qs,"host":$hostJson,$extra"sf":"$sfDir"}"""
     println(line)
     // Persist the full result AND the host forensics to files: the driver's
     // stdout tail keeps only the last ~2 KB, which truncated every round's
@@ -373,7 +383,7 @@ object Bench {
     if (only.isEmpty) {
       val top = results.filter(_._2 >= 0).sortBy(-_._2).take(20)
       println(BenchJson.compactTotal(total, failed, top, sfDir,
-        results.size, hostJson, streamExtra))
+        results.size, hostJson, extra))
     }
     spark.stop()
   }

@@ -68,6 +68,12 @@ object BenchJson {
       s""""rows_per_s":${num(if (secs > 0) rows / secs else -1.0, 0)},""" +
       s""""n_batches":$nBatches,"batch_ms_p50":$p50Ms,"batch_ms_p99":$p99Ms}"""
 
+  /** The graded lines' `codegen` field, with its trailing comma: generated
+    * classes compiled over the measured queries and the ms spent compiling
+    * them, as deltas of Spark's process-wide codegen counters. */
+  def codegenRecord(compiles: Long, ms: Double): String =
+    s""""codegen":{"compiles":$compiles,"ms":${num(ms, 0)}},"""
+
   /** The LAST stdout line of a full run — must fit the driver's ~2 KB
     * tail capture and parse standalone. `host` is [[hostSummary]]'s
     * object, so a graded artifact carries its own weather evidence.

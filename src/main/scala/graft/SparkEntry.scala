@@ -36,12 +36,18 @@ object SparkEntry {
   def allDefs: Seq[QueryDef] = defGroups.flatMap(_._2)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
-  def entry(spark: SparkSession): DataFrame =
+  def entry(spark: SparkSession): DataFrame = {
+    graft.core.LocalSession.adoptTaskLoader(spark)
     Relational.pricingSummary(spark, "/root/testdata/sf0.001")
+  }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each entry, like
+    * [[entry]], first calls [[graft.core.LocalSession.adoptTaskLoader]], so
+    * it compiles each generated class once whoever built the session. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    allDefs.map(d => d.name -> d.fn).toMap
+    allDefs.map(d => d.name -> { (spark: SparkSession, dir: String) =>
+      graft.core.LocalSession.adoptTaskLoader(spark); d.fn(spark, dir)
+    }).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

@@ -1,5 +1,7 @@
 package graft.core
 
+import scala.util.chaining._
+
 import org.apache.spark.sql.SparkSession
 
 /** The one local-session definition. Bench, Verify, the tools and the test
@@ -23,11 +25,41 @@ object LocalSession {
     "spark.sql.autoBroadcastJoinThreshold" -> (64L << 20).toString,
     "spark.ui.enabled" -> "false") ++ localDir.map("spark.local.dir" -> _)
 
-  /** Build (or join) the JVM's session, with a warehouse dir deleted on exit.
-    * `cores` defaults to `SPARK_GRAFT_CPUS`, else every processor. */
+  /** Build (or join) the JVM's session, with a warehouse dir deleted on exit,
+    * and give the caller its task loader ([[adoptTaskLoader]]). `cores`
+    * defaults to `SPARK_GRAFT_CPUS`, else every processor. */
   def apply(cores: Int = sys.env.get("SPARK_GRAFT_CPUS")
       .fold(Runtime.getRuntime.availableProcessors())(_.trim.toInt),
       localDir: Option[String] = None): SparkSession =
     SparkSession.builder().config(settings(cores, localDir))
       .config("spark.sql.warehouse.dir", Scratch.dir("graft-warehouse")).getOrCreate()
+      .tap(adoptTaskLoader)
+
+  @volatile private var captured: ClassLoader = _
+  private val taskLoaders = new java.util.WeakHashMap[SparkSession, ClassLoader]()
+
+  /** Set the caller's context classloader to the one `spark`'s SQL tasks run
+    * under, so that each generated class is compiled once. Spark keys its
+    * codegen cache on that loader. A whole-stage class is compiled on the
+    * driver for its size check, on AQE pool threads that inherit their
+    * creator's loader, and again in a task, under the session's executor
+    * loader: two loaders, two compiles, two cache entries. Pool threads the
+    * caller creates afterwards inherit the task loader.
+    *
+    * Local mode only, because only there do the driver and the executors
+    * share one JVM. The task loader resolves parent-first and adds no
+    * classes, so class lookup does not change. One tiny job per session
+    * captures it; later calls only set it on the caller.
+    */
+  def adoptTaskLoader(spark: SparkSession): Unit =
+    if (spark.sparkContext.isLocal) {
+      val loader = taskLoaders.synchronized {
+        taskLoaders.computeIfAbsent(spark, _ => {
+          spark.range(1).foreachPartition((_: Iterator[java.lang.Long]) =>
+            captured = Thread.currentThread.getContextClassLoader)
+          captured
+        })
+      }
+      Thread.currentThread.setContextClassLoader(loader)
+    }
 }

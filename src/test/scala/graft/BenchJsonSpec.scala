@@ -54,7 +54,8 @@ class BenchJsonSpec extends AnyFunSuite {
       val compact = BenchJson.compactTotal(236.068, 2,
         Seq("q63_pipeline_transform" -> 6.824, "q126_triangles" -> 6.19),
         "/root/testdata/sf0.1", 237, host,
-        extra = "\"stream\":{" + drain + "},")
+        extra = "\"stream\":{" + drain + "}," +
+          BenchJson.codegenRecord(2491L, 31234.56))
       val n5 = mapper.readTree(compact)
       assert(n5.get("metric").asText() == "total")
       assert(n5.get("value").asDouble() == 236.068)
@@ -67,6 +68,8 @@ class BenchJsonSpec extends AnyFunSuite {
       // item 1): steal/eff readable from the compact line alone
       assert(n5.get("host").get("steal").asLong() == 975L)
       assert(n5.get("stream").get("q231_drain").get("sec").asDouble() == 4.27)
+      assert(n5.get("codegen").get("compiles").asLong() == 2491L)
+      assert(n5.get("codegen").get("ms").asDouble() == 31235.0)
       // tail-capture contract: the compact line stays well under ~2 KB
       assert(compact.length < 2000)
     }
@@ -87,13 +90,15 @@ class BenchJsonSpec extends AnyFunSuite {
         999999L, 999999L),
       BenchJson.drainRecord("q232_drain", 999999999L, 9999.99, 9999,
         999999L, 999999L))
-      .mkString("\"stream\":{", ",", "},")
+      .mkString("\"stream\":{", ",", "},") +
+      BenchJson.codegenRecord(999999999L, 99999999.9)
     val top = (1 to 20).map(i => f"q$i%03d_" + "x" * 34 -> 99999.999)
     val line = BenchJson.compactTotal(99999.999, 250, top,
       "/root/testdata/sf0.1", 250, host, drains)
     val n = mapper.readTree(line)
     assert(n.get("queries").size() == 20)
     assert(n.get("failed").asInt() == 250)
+    assert(n.get("codegen").get("compiles").asLong() == 999999999L)
     assert(line.length < 2000, s"compact line ${line.length}B busts the tail budget")
   }
 

@@ -201,7 +201,8 @@ class EventStreamsSpec extends SparkTestBase {
     def runOnce(): Unit = {
       val q = EventStreams.incrementalParquetSink(
         EventStreams.readEventStream(spark, sf), out, ckpt)
-      q.awaitTermination(120000)
+      try assert(q.awaitTermination(120000), "drain did not finish")
+      finally q.stop()
     }
     runOnce()
     val n1 = spark.read.parquet(out).count()
@@ -222,13 +223,15 @@ class EventStreamsSpec extends SparkTestBase {
       .option("checkpointLocation", s"$dir/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination(120000)
-    // append mode emits only watermark-closed windows; the final window stays
-    // open, so compare against all-but-the-last-hour of the batch twin
-    val streamed = spark.table("file_stream_test").count()
-    val batch = graft.queries.EventsQ.hourlyWindow(spark, sf).count()
-    assert(streamed > 0, "streaming read produced no closed windows")
-    assert(streamed <= batch)
+    try {
+      assert(q.awaitTermination(120000), "drain did not finish")
+      // append mode emits only watermark-closed windows; the final window
+      // stays open, so compare against all-but-the-last-hour of the batch twin
+      val streamed = spark.table("file_stream_test").count()
+      val batch = graft.queries.EventsQ.hourlyWindow(spark, sf).count()
+      assert(streamed > 0, "streaming read produced no closed windows")
+      assert(streamed <= batch)
+    } finally q.stop()
   }
 
   test("file-stream read drains a multi-file file: events directory") {
@@ -304,16 +307,18 @@ class EventStreamsSpec extends SparkTestBase {
       .option("checkpointLocation", s"$dir/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination(120000)
-    val batchTwin = graft.queries.WindowsQ.latestEventPerKey(spark, sf)
-      .collect()
-      .map(r => (r.getLong(1), r.getString(2)) ->
-        ((r.getLong(3), r.getLong(0), r.getDouble(4)))).toMap
-    assert(state.size() == batchTwin.size, "key cardinality must match q18")
-    batchTwin.foreach { case (k, (tsUs, eid, value)) =>
-      val s = state.get(k)
-      assert(s != null && s.ts_us == tsUs && s.event_id == eid && s.value == value,
-        s"state for $k diverged from the batch twin")
-    }
+    try {
+      assert(q.awaitTermination(120000), "drain did not finish")
+      val batchTwin = graft.queries.WindowsQ.latestEventPerKey(spark, sf)
+        .collect()
+        .map(r => (r.getLong(1), r.getString(2)) ->
+          ((r.getLong(3), r.getLong(0), r.getDouble(4)))).toMap
+      assert(state.size() == batchTwin.size, "key cardinality must match q18")
+      batchTwin.foreach { case (k, (tsUs, eid, value)) =>
+        val s = state.get(k)
+        assert(s != null && s.ts_us == tsUs && s.event_id == eid && s.value == value,
+          s"state for $k diverged from the batch twin")
+      }
+    } finally q.stop()
   }
 }
